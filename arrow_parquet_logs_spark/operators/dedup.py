@@ -15,20 +15,22 @@ the quadratic blow-up *before* any pairwise work, which is the whole game at
   all-pairs answer at any threshold (triangle inequality).
 
 All hashing uses functions.hashing.hash64 (md5-derived) so every stage is
-reproducible in the DuckDB oracle bit-for-bit. No Python UDFs anywhere in
-the expression forms — signatures are Catalyst expressions; the ``_fast``
-variants move only the embarrassingly-parallel signature stage to
-Arrow-batched pandas, bit-identically.
+reproducible in the DuckDB oracle bit-for-bit. The per-document and
+per-vector stages (shingling, minhash signatures, cell assignment, block
+cosine) run Arrow-batched in pandas/numpy, one pass per stage; joins,
+verification and clustering stay Catalyst. The DuckDB oracles are the
+independent spec each operator is checked against.
 """
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame, Window as W, functions as F, types as T
 
 from arrow_parquet_logs_spark.functions.hashing import hash64
-from arrow_parquet_logs_spark.functions.vector import cosine_sim
-from arrow_parquet_logs_spark.operators._parallel import estimated_scan_splits, spread_for_python
-from arrow_parquet_logs_spark.operators.text import distinct_shingles, token_counts
+from arrow_parquet_logs_spark.operators._parallel import spread_for_python
+from arrow_parquet_logs_spark.operators.text import token_counts
 
 
 # ---------------------------------------------------------------- exact ----
@@ -49,77 +51,132 @@ def keep_latest(df: DataFrame, keys: list[str], order_col: str, tiebreak: str) -
 
 
 # ------------------------------------------------------- shingle helpers ----
-def spread(df: DataFrame, key: str) -> DataFrame:
-    """Spread a doc slice across the session's shuffle parallelism before a
-    CPU-heavy stage. A Catalyst chain (interpreted-HOF shingling, exploded
-    index partial aggregation) inherits the SCAN's task count — 1 for a
-    single-file corpus, since parquet splits are IO-sized, not CPU-sized —
-    and then grinds single-threaded (the defect class the sf1 probe caught
-    on dedup_edit_distance). One bounded text shuffle; used by the exact
-    audit-form operators only, whose SCALING.md contract already trades
-    shuffle volume for exactness (LSH is the no-text-shuffle path).
+#: Java \s (ASCII-only), applied with split limit=-1 — precompiled once;
+#: _py_shingles runs once per document on the hot fast path.
+_JAVA_WS = re.compile("[ \t\n\x0b\f\r]+")
 
-    No-op when the scan already carries ≥ shuffle-parallelism input
-    SPLITS (the ``spread_for_python`` gate): at cluster scale a 100 TB
-    table arrives as tens of thousands of splits and repartitioning it
-    again would be a pure-loss text shuffle — the gate keeps the fix
-    scoped to the small-file case that actually grinds single-threaded.
-    Splits, not files (ADVICE r6): Spark BIN-PACKS small files into scan
-    partitions by padded size, so thousands of tiny files can still
-    arrive as a handful of tasks — a raw file-count gate passes exactly
-    the corpus shape the repartition exists to fix. The shared
-    ``estimated_scan_splits`` reproduces Spark's packing arithmetic from
-    file stats (file-count fallback on non-stat-able object storage)."""
-    n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    try:
-        if estimated_scan_splits(df) >= n:
-            return df
-    except Exception:
-        pass
-    return df.repartition(n, key)
+
+def _py_shingles(text, n: int) -> list[str]:
+    """Distinct word n-gram shingles, reproducing the Catalyst expression
+    ``text.distinct_shingles`` (``array_distinct(shingles(split(lower(
+    trim(text)), '\\s+'), n))``) bit-for-bit: trim strips ASCII spaces
+    only, Java ``\\s`` is ASCII-only (no \\xa0), trailing empty tokens are
+    KEPT (split limit=-1), short docs collapse to one whole-doc shingle
+    (pinned against the expression; see
+    tests/test_operators.py::test_minhash_pandas_matches_catalyst)."""
+    toks = _JAVA_WS.split(("" if text is None else str(text)).strip(" ").lower())
+    if len(toks) >= n:
+        return list(dict.fromkeys(" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)))
+    return [" ".join(toks)]
 
 
 def _shingle_sets(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
-    # tokens materialized as a column so the shingle builder's argument
-    # evaluations reference an attribute, not a re-splittable expression
-    # (the lambda re-eval class; SCALING.md round 10)
-    from arrow_parquet_logs_spark.operators.text import shingles, tokens
+    """(sid, sh) distinct shingle sets via one Arrow-batched mapInPandas
+    pass — the rows of ``text.distinct_shingles``, ~5× faster than that
+    expression because Catalyst evaluates its higher-order functions
+    interpreted per array element, while this path tokenizes with the C
+    regex engine. The spread gate runs inside, so callers pass the raw
+    scan."""
+    id_type = dict(df.dtypes)[id_col]
 
-    base = df.select(F.col(id_col).alias("sid"), tokens(text_col).alias("_t"))
-    return base.select("sid", F.array_distinct(shingles(F.col("_t"), n)).alias("sh"))
+    def gen(batches):
+        import pandas as pd
+
+        for pdf in batches:
+            yield pd.DataFrame(
+                {
+                    "sid": pdf[id_col],
+                    "sh": [_py_shingles(t, n) for t in pdf[text_col]],
+                }
+            )
+
+    return spread_for_python(df.select(id_col, text_col)).mapInPandas(
+        gen, f"sid {id_type}, sh array<string>"
+    )
 
 
-def _band_keys_from_sets(sets: DataFrame, k: int, bands: int) -> DataFrame:
-    """(sid, band_key) LSH band keys from (sid, sh) shingle sets.
+def _sid_keyed_sets(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
+    """``_shingle_sets`` hash-partitioned on sid, for the exact-Jaccard
+    operators: their per-doc size and verification joins key on
+    a_id/b_id (aliases of sid) and reuse this partitioning instead of
+    shuffling the sets once per join side — a mapInPandas output carries
+    no partitioning Spark can see. Measured at sf0.1 on 4 cores:
+    ``jaccard_prefix_pairs`` 11–14 s on the round-robin sets, 5.6 s on
+    the hashed ones."""
+    parts = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    return _shingle_sets(df, id_col, text_col, n).repartition(parts, "sid")
 
-    Signatures via explode + codegen min-aggregation rather than nested
-    higher-order functions: HOFs evaluate interpreted per element, while
-    exploded column arithmetic stays in whole-stage codegen (~20% faster
-    end-to-end, identical values). One shuffle on sid. Band keys are the
-    same ``md5('<band>:<joined minhashes>')`` the SQL oracles compute from
-    the signature array — and because the minhash coefficient family is
-    fixed, band keys computed TODAY collide correctly with band keys
-    computed LAST MONTH: the property the persistent index relies on."""
+
+def _minhash_sets(
+    df: DataFrame, id_col: str, text_col: str, n: int, k: int
+) -> DataFrame:
+    """(sid, sh, sig) via one Arrow-batched mapInPandas pass.
+
+    Bit-identical to the expression recipe the SQL oracles replay
+    (``text.distinct_shingles`` → ``hash64`` mod ``MINHASH_P`` → min of
+    the k affine rehashes) but ~5× faster: shingling per ``_py_shingles``,
+    md5 via hashlib (C), and all k affine mins as one numpy (shingles × k)
+    matrix op per document."""
     from arrow_parquet_logs_spark.functions.hashing import MINHASH_P, minhash_coeffs
 
-    rows = k // bands
     ca, cb = minhash_coeffs(k)
-    hashes = sets.select("sid", F.explode("sh").alias("g")).select(
-        "sid", (hash64(F.col("g")) % MINHASH_P).alias("h")
-    )
-    sig_cols = hashes.groupBy("sid").agg(
-        *[F.min((F.lit(ca[i]) * F.col("h") + F.lit(cb[i])) % MINHASH_P).alias(f"s{i}") for i in range(k)]
-    )
+    id_type = dict(df.dtypes)[id_col]
+    out_schema = f"sid {id_type}, sh array<string>, sig array<bigint>"
+
+    def gen(batches):
+        import hashlib
+
+        import numpy as np
+        import pandas as pd
+
+        a_np = np.array(ca, dtype=np.int64)
+        b_np = np.array(cb, dtype=np.int64)
+        for pdf in batches:
+            sids, shs, sigs = [], [], []
+            for sid, text in zip(pdf[id_col], pdf[text_col]):
+                sh = _py_shingles(text, n)
+                hs = (
+                    np.fromiter(
+                        (
+                            int(hashlib.md5(g.encode("utf-8")).hexdigest()[:15], 16)
+                            for g in sh
+                        ),
+                        dtype=np.int64,
+                        count=len(sh),
+                    )
+                    % MINHASH_P
+                )
+                # (shingles × k) affine rehash; values < 2^62 so int64 is exact
+                sig = ((hs[:, None] * a_np[None, :] + b_np[None, :]) % MINHASH_P).min(axis=0)
+                sids.append(sid)
+                shs.append(sh)
+                sigs.append(sig.tolist())
+            yield pd.DataFrame({"sid": sids, "sh": shs, "sig": sigs})
+
+    return spread_for_python(df.select(id_col, text_col)).mapInPandas(gen, out_schema)
+
+
+def _band_keys_from_sigs(sets: DataFrame, k: int, bands: int) -> DataFrame:
+    """(sid, band_key) LSH band keys from a (sid, ..., sig) frame: one
+    ``md5('<band>:<joined minhashes>')`` string per band, the key the SQL
+    oracles compute from the signature array. Because the minhash
+    coefficient family is fixed, band keys computed TODAY collide
+    correctly with band keys computed LAST MONTH: the property the
+    persistent index relies on."""
+    rows = k // bands
     band_exprs = [
         F.md5(
             F.concat(
                 F.lit(f"{b}:"),
-                F.concat_ws(",", *[F.col(f"s{b * rows + j}").cast("string") for j in range(rows)]),
+                F.concat_ws(
+                    ",",
+                    *[F.element_at("sig", b * rows + j + 1).cast("string") for j in range(rows)],
+                ),
             )
         )
         for b in range(bands)
     ]
-    return sig_cols.select("sid", F.explode(F.array(*band_exprs)).alias("band_key"))
+    return sets.select("sid", F.explode(F.array(*band_exprs)).alias("band_key"))
 
 
 def _verify_jaccard(cand: DataFrame, sets: DataFrame, threshold: float) -> DataFrame:
@@ -144,7 +201,6 @@ def ngram_jaccard_pairs(
     text_col: str = "text",
     n: int = 3,
     threshold: float = 0.6,
-    pandas_shingles: bool = False,
     max_shingle_df: int | None = 1000,
     join_work_budget: int = 1_000_000_000,
 ) -> DataFrame:
@@ -202,16 +258,9 @@ def ngram_jaccard_pairs(
     index inside every partition before any join work — ~3 s at sf0.1 for a
     cap that removed nothing. The aggregate form touches the index twice
     (both reads served by the persisted ``sets``) but sorts nothing, and
-    the anti-join is a broadcast: no extra exchange on the index itself.
-
-    ``pandas_shingles=True`` swaps the interpreted-HOF Catalyst shingle
-    stage for the bit-identical mapInPandas one (production path)."""
-    shingler = _shingle_sets_pandas if pandas_shingles else _shingle_sets
-    # spread only the Catalyst form: the pandas shingler already
-    # repartitions inside spread_for_python (avoid a double text shuffle)
-    src = df if pandas_shingles else spread(df, id_col)
+    the anti-join is a broadcast: no extra exchange on the index itself."""
     # persisted: feeds the inverted index and the per-doc sizes
-    sets = shingler(src, id_col, text_col, n).persist()
+    sets = _sid_keyed_sets(df, id_col, text_col, n).persist()
     inv = sets.select("sid", F.explode("sh").alias("g"))
     dropped = 0
     if max_shingle_df is not None:
@@ -436,7 +485,9 @@ def minhash_lsh_pairs(
     The only join is on band keys — candidates are pairs agreeing on all
     ``k/bands`` minhashes in some band (P(candidate) ≈ 1-(1-j^r)^b), so work
     scales with true-duplicate density, not corpus². This is the 100 TB
-    dedup path. ``collapse_exact`` (default) first collapses byte-identical
+    dedup path. Shingles and signatures come from one Arrow-batched pass
+    (``_minhash_sets``); the banding join and Jaccard verification are
+    Catalyst. ``collapse_exact`` (default) first collapses byte-identical
     documents to one representative and emits star edges for them (see
     `_exact_collapse`) — the defense against degenerate hot bands from
     duplicate floods; AQE's skew handling covers what remains (near- but
@@ -444,18 +495,18 @@ def minhash_lsh_pairs(
     stars = None
     if collapse_exact:
         df, stars = _exact_collapse(df, id_col, text_col)
-    # persist the shingle sets: they feed hashing once and the Jaccard
+    # persist the signature sets: they feed banding once and the Jaccard
     # verification twice — without it the docs are re-scanned and
     # re-shingled three times inside one action (at 100 TB: checkpoint it).
     # Ownership note: the cache entry outlives this call (the returned DF is
     # lazy); Spark's cache manager dedups identical plans across calls and
     # evicts LRU under memory pressure, so repeated invocations stay bounded.
-    sets = _shingle_sets(df, id_col, text_col, n).persist()
-    bk = _band_keys_from_sets(sets, k, bands)
+    sets = _minhash_sets(df, id_col, text_col, n, k).persist()
+    bk = _band_keys_from_sigs(sets, k, bands)
     a = bk.select(F.col("sid").alias("a_id"), "band_key")
     b = bk.select(F.col("sid").alias("b_id"), "band_key")
     cand = a.join(b, "band_key").where(F.col("a_id") < F.col("b_id")).select("a_id", "b_id").distinct()
-    verified = _verify_jaccard(cand, sets, threshold)
+    verified = _verify_jaccard(cand, sets.select("sid", "sh"), threshold)
     return verified.unionByName(stars) if stars is not None else verified
 
 
@@ -468,7 +519,6 @@ def materialize_minhash_index(
     k: int = 32,
     bands: int = 8,
     mode: str = "overwrite",
-    pandas_sigs: bool = False,
 ) -> None:
     """Persist the corpus's LSH band keys as a parquet index: one
     ``(sid, band_key)`` row per (document, band).
@@ -482,19 +532,11 @@ def materialize_minhash_index(
     ingest. ~``bands`` rows × ~50 bytes per document ≈ 1/1000 of corpus
     bytes. Unpartitioned on purpose: probes hit every band, and the join
     key (band_key) is a uniform md5 — there is no pruning axis; the
-    shuffle-on-band_key join IS the access path.
-
-    ``pandas_sigs`` swaps the Catalyst signature pipeline for the
-    Arrow-batched ``_minhash_sets_pandas`` one — BIT-IDENTICAL keys
-    (pinned by test_minhash_pandas_matches_catalyst), ~5× faster on the
-    full-corpus pass this function is; the two forms can be mixed freely
-    across the life of one index."""
-    if pandas_sigs:
-        sets = _minhash_sets_pandas(df, id_col, text_col, n, k)
-        bk = _band_keys_from_sigs(sets, k, bands)
-    else:
-        bk = _band_keys_from_sets(_shingle_sets(df, id_col, text_col, n), k, bands)
-    bk.write.mode(mode).parquet(path)
+    shuffle-on-band_key join IS the access path. The keys are pinned
+    against the expression recipe in test_minhash_pandas_matches_catalyst,
+    so an index written by any earlier build stays valid."""
+    sets = _minhash_sets(df, id_col, text_col, n, k)
+    _band_keys_from_sigs(sets, k, bands).write.mode(mode).parquet(path)
 
 
 def append_to_minhash_index(
@@ -505,16 +547,12 @@ def append_to_minhash_index(
     n: int = 3,
     k: int = 32,
     bands: int = 8,
-    pandas_sigs: bool = False,
 ) -> None:
     """Add a new batch's band keys to an existing index (parquet append —
     the same incremental-maintenance contract as `pq.append_to_ivfpq`).
     Run after the batch passed `minhash_pairs_incremental`, so the index
     always reflects every document admitted so far."""
-    materialize_minhash_index(
-        df, path, id_col, text_col, n, k, bands, mode="append",
-        pandas_sigs=pandas_sigs,
-    )
+    materialize_minhash_index(df, path, id_col, text_col, n, k, bands, mode="append")
 
 
 def minhash_pairs_incremental(
@@ -528,12 +566,9 @@ def minhash_pairs_incremental(
     k: int = 32,
     bands: int = 8,
     threshold: float = 0.6,
-    pandas_sigs: bool = False,
 ) -> DataFrame:
     """Near-dup pairs of an INCOMING batch against an indexed corpus —
-    without recomputing a single corpus signature. ``pandas_sigs`` runs
-    the batch's shingle+signature stage Arrow-batched (bit-identical
-    keys; ~5× faster — see `materialize_minhash_index`).
+    without recomputing a single corpus signature.
 
     The per-batch cost is what a steady-state ingest pipeline pays:
     shingle + minhash the batch only, join its band keys against the
@@ -546,13 +581,9 @@ def minhash_pairs_incremental(
     (a_id, b_id, jaccard) with a_id < b_id, jaccard ≥ threshold — the
     same row shape and verification as `minhash_lsh_pairs`, so the same
     policy code consumes either."""
-    if pandas_sigs:
-        nfull = _minhash_sets_pandas(new_docs, id_col, text_col, n, k).persist()
-        nsets = nfull.select("sid", "sh")
-        nbk = _band_keys_from_sigs(nfull, k, bands).persist()
-    else:
-        nfull = nsets = _shingle_sets(new_docs, id_col, text_col, n).persist()
-        nbk = _band_keys_from_sets(nsets, k, bands).persist()
+    nfull = _minhash_sets(new_docs, id_col, text_col, n, k).persist()
+    nsets = nfull.select("sid", "sh")
+    nbk = _band_keys_from_sigs(nfull, k, bands).persist()
 
     idx = spark.read.parquet(path).withColumnRenamed("sid", "c_sid")
     cross = (
@@ -577,8 +608,7 @@ def minhash_pairs_incremental(
     corpus_hit = corpus_docs.join(
         cand_ids, corpus_docs[id_col] == cand_ids["cid"], "left_semi"
     )
-    shingler = _shingle_sets_pandas if pandas_sigs else _shingle_sets
-    csets = shingler(corpus_hit, id_col, text_col, n)
+    csets = _shingle_sets(corpus_hit, id_col, text_col, n)
     # materialize the (candidate-sized) verified pairs, then release the
     # per-batch caches — an ingest loop calling this repeatedly must not
     # accumulate persisted plans across batches (LRU eviction is not a
@@ -589,146 +619,6 @@ def minhash_pairs_incremental(
     nfull.unpersist()
     nbk.unpersist()
     return verified
-
-
-import re as _re
-
-#: Java \s (ASCII-only), applied with split limit=-1 — precompiled once;
-#: _py_shingles runs once per document on the hot fast path.
-_JAVA_WS = _re.compile("[ \t\n\x0b\f\r]+")
-
-
-def _py_shingles(text, n: int) -> list[str]:
-    """Distinct word n-gram shingles, reproducing the Catalyst expression
-    ``array_distinct(shingles(split(lower(trim(text)), '\\s+'), n))``
-    bit-for-bit: trim strips ASCII spaces only, Java ``\\s`` is ASCII-only
-    (no \\xa0), trailing empty tokens are KEPT (split limit=-1), short docs
-    collapse to one whole-doc shingle (empirically pinned; see
-    tests/test_operators.py::test_minhash_pandas_matches_catalyst)."""
-    toks = _JAVA_WS.split(("" if text is None else str(text)).strip(" ").lower())
-    if len(toks) >= n:
-        return list(dict.fromkeys(" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)))
-    return [" ".join(toks)]
-
-
-def _shingle_sets_pandas(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
-    """(sid, sh) via one Arrow-batched mapInPandas pass — same rows as
-    ``_shingle_sets`` but ~5× faster: the Catalyst shingle builder evaluates
-    interpreted higher-order functions per array element, while this path
-    tokenizes with the C regex engine."""
-    id_type = dict(df.dtypes)[id_col]
-
-    def gen(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "sid": pdf[id_col],
-                    "sh": [_py_shingles(t, n) for t in pdf[text_col]],
-                }
-            )
-
-    return spread_for_python(df.select(id_col, text_col)).mapInPandas(
-        gen, f"sid {id_type}, sh array<string>"
-    )
-
-
-def _minhash_sets_pandas(
-    df: DataFrame, id_col: str, text_col: str, n: int, k: int
-) -> DataFrame:
-    """(sid, sh, sig) via one Arrow-batched mapInPandas pass.
-
-    Bit-identical to the Catalyst pipeline (tokens → shingles → md5-affine
-    minhash) but ~5× faster: shingling per ``_py_shingles``, md5 via
-    hashlib (C), and all k affine mins as one numpy (shingles × k) matrix
-    op per document."""
-    from arrow_parquet_logs_spark.functions.hashing import MINHASH_P, minhash_coeffs
-
-    ca, cb = minhash_coeffs(k)
-    id_type = dict(df.dtypes)[id_col]
-    out_schema = f"sid {id_type}, sh array<string>, sig array<bigint>"
-
-    def gen(batches):
-        import hashlib
-
-        import numpy as np
-        import pandas as pd
-
-        a_np = np.array(ca, dtype=np.int64)
-        b_np = np.array(cb, dtype=np.int64)
-        for pdf in batches:
-            sids, shs, sigs = [], [], []
-            for sid, text in zip(pdf[id_col], pdf[text_col]):
-                sh = _py_shingles(text, n)
-                hs = (
-                    np.fromiter(
-                        (
-                            int(hashlib.md5(g.encode("utf-8")).hexdigest()[:15], 16)
-                            for g in sh
-                        ),
-                        dtype=np.int64,
-                        count=len(sh),
-                    )
-                    % MINHASH_P
-                )
-                # (shingles × k) affine rehash; values < 2^62 so int64 is exact
-                sig = ((hs[:, None] * a_np[None, :] + b_np[None, :]) % MINHASH_P).min(axis=0)
-                sids.append(sid)
-                shs.append(sh)
-                sigs.append(sig.tolist())
-            yield pd.DataFrame({"sid": sids, "sh": shs, "sig": sigs})
-
-    return spread_for_python(df.select(id_col, text_col)).mapInPandas(gen, out_schema)
-
-
-def _band_keys_from_sigs(sets: DataFrame, k: int, bands: int) -> DataFrame:
-    """(sid, band_key) from a (sid, ..., sig) frame whose signature array
-    is already materialized — the band keys are the same
-    ``md5('<band>:<joined minhashes>')`` strings `_band_keys_from_sets`
-    derives from shingles, so indexes built/appended through either form
-    collide correctly with each other."""
-    rows = k // bands
-    band_exprs = [
-        F.md5(
-            F.concat(
-                F.lit(f"{b}:"),
-                F.concat_ws(
-                    ",",
-                    *[F.element_at("sig", b * rows + j + 1).cast("string") for j in range(rows)],
-                ),
-            )
-        )
-        for b in range(bands)
-    ]
-    return sets.select("sid", F.explode(F.array(*band_exprs)).alias("band_key"))
-
-
-def minhash_lsh_pairs_pandas(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    k: int = 32,
-    bands: int = 8,
-    threshold: float = 0.6,
-    collapse_exact: bool = True,
-) -> DataFrame:
-    """`minhash_lsh_pairs` with the signature stage in vectorized pandas.
-
-    Same output bit-for-bit (same DuckDB oracle applies); the banding join
-    and Jaccard verification stay Catalyst. This is the bench/production
-    path — the expression form remains as the oracle-shaped reference."""
-    stars = None
-    if collapse_exact:
-        df, stars = _exact_collapse(df, id_col, text_col)
-    sets = _minhash_sets_pandas(df, id_col, text_col, n, k).persist()
-    bk = _band_keys_from_sigs(sets, k, bands)
-    a = bk.select(F.col("sid").alias("a_id"), "band_key")
-    b = bk.select(F.col("sid").alias("b_id"), "band_key")
-    cand = a.join(b, "band_key").where(F.col("a_id") < F.col("b_id")).select("a_id", "b_id").distinct()
-    verified = _verify_jaccard(cand, sets.select("sid", "sh"), threshold)
-    return verified.unionByName(stars) if stars is not None else verified
 
 
 # ------------------------------------------------------------ SimHash ----
@@ -1140,7 +1030,6 @@ def embedding_dup_pairs(
     emb: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    cell_col: str | None = None,
     threshold: float = 0.4,
     k_cells: int | None = None,
     kmeans_iters: int = 5,
@@ -1148,145 +1037,42 @@ def embedding_dup_pairs(
     """Near-dup vector pairs (rounded cosine ≥ ``threshold``) via learned
     IVF cells — candidate generation bounded by cells, result **exact**.
 
-    Default (``cell_col=None``): fit deterministic k-means on the
-    unit-normalized vectors (``operators.ivf.fit_kmeans``), assign every
-    vector a primary cell plus an **ε-complete expanded set** — all cells
-    within ``nearest + 2ε`` where ``ε = √(2−2t)`` is the unit-sphere chord
-    length of the cosine threshold. Candidates are (expanded ⋈ primary) on
-    the cell id. Completeness is a theorem, not a tuning: for any pair with
-    cosine ≥ t, ‖â−b̂‖ ≤ ε, so b's primary cell lies in a's expanded set
-    (triangle inequality twice: d(â,cb) ≤ ε + d(b̂,cb) ≤ 2ε + d(â,ca)).
-    The exact cosine filter after the join removes false candidates, so the
-    output equals the all-pairs answer at every threshold — which is what
-    lets a SQL oracle check this operator without replaying the k-means.
+    Fit deterministic k-means on the unit-normalized vectors
+    (``operators.ivf``), assign every vector a primary cell plus an
+    **ε-complete expanded set** — all cells within ``nearest + 2ε`` where
+    ``ε = √(2−2t)`` is the unit-sphere chord length of the cosine
+    threshold. Candidates are (expanded ⋈ primary) on the cell id.
+    Completeness is a theorem, not a tuning: for any pair with cosine ≥ t,
+    ‖â−b̂‖ ≤ ε, so b's primary cell lies in a's expanded set (triangle
+    inequality twice: d(â,cb) ≤ ε + d(b̂,cb) ≤ 2ε + d(â,ca)). The exact
+    cosine filter removes false candidates, so the output equals the
+    all-pairs answer at every threshold — which is what lets a SQL oracle
+    check this operator without replaying the k-means.
 
     Cost adapts to the threshold: near-dup thresholds (t→1) shrink ε so the
     expanded set collapses to the primary cell and work is Σ|cell|²; loose
     thresholds widen the expansion toward brute force — as they must, since
     exactness at low t *is* near-quadratic. At 100 TB run with t ≥ 0.85.
-    ``k_cells=None`` (default) sizes cells as ``max(16, ⌊√N⌋)`` from one
-    count — the standard IVF sizing the earlier fixed default of 16 only
-    *documented*: with c ∝ √N the tight-threshold work Σ|cell|² is
-    Θ(N^1.5) instead of Θ(N²/16). Cell count never changes the OUTPUT
-    (the ε-complete theorem is about which cells are probed), so the
-    oracle is unaffected by the sizing.
+    ``k_cells=None`` sizes cells as √N (``ivf.sized_cells``); cell count
+    never changes the OUTPUT.
 
-    ``cell_col`` given: legacy pre-assigned-cell mode — pairwise only within
-    the provided cell (approximate: cross-cell pairs are not compared)."""
-    cos = F.round(cosine_sim(F.col("a_v"), F.col("b_v")), 6)
-    if cell_col is not None:
-        a = emb.select(
-            F.col(cell_col).alias("cell"), F.col(id_col).alias("a_id"), F.col(vec_col).alias("a_v")
-        )
-        b = emb.select(
-            F.col(cell_col).alias("cell"), F.col(id_col).alias("b_id"), F.col(vec_col).alias("b_v")
-        )
-        return (
-            a.join(b, "cell")
-            .where(F.col("a_id") < F.col("b_id"))
-            .select("cell", "a_id", "b_id", cos.alias("cosine"))
-            .where(F.col("cosine") >= threshold)
-        )
-
-    import math
-
-    from arrow_parquet_logs_spark.functions.vector import as_double_array, l2_norm
-    from arrow_parquet_logs_spark.operators import ivf
-
-    # unit-normalize once: k-means in cosine geometry, and the ε-bound only
-    # holds on the sphere. Zero vectors keep a null unit vector and fall out
-    # of the candidate join (their cosine is undefined anyway).
-    v = as_double_array(vec_col)
-    # spread: the ε-expanded candidate generation (explode → cell join →
-    # pair-distinct partial agg) and the per-pair interpreted cosine fold
-    # pipeline off this scan — a single-file corpus would run them in ONE
-    # task (the sf1-probe defect class). One bounded vector shuffle.
-    base = (
-        spread(emb, id_col)
-        .select(F.col(id_col).alias("sid"), F.col(vec_col).alias("v"), l2_norm(v).alias("_n"))
-        .withColumn(
-            "uv",
-            F.when(
-                F.col("_n") > 0,
-                F.transform(as_double_array("v"), lambda x: x / F.col("_n")),
-            ),
-        )
-        .drop("_n")
-    )
-    # tiny margin: a true cosine of t−1e-6 can round UP to t; widen ε to
-    # cover everything the rounded filter can admit
-    eps = math.sqrt(max(2.0 - 2.0 * (threshold - 1e-6), 0.0))
-    # ONE planning job: the k-means fit sample doubles as the cell-sizing
-    # probe — only a sample-truncating corpus (> sample_rows) pays a
-    # separate count, and there the count is noise next to the fit.
-    # (n counts the non-null sample, vs the raw count the earlier
-    # two-job form used; cell count never changes the OUTPUT — the
-    # ε-complete theorem is about which cells are probed.)
-    x, truncated = ivf.kmeans_sample(base.where(F.col("uv").isNotNull()),
-                                     id_col="sid", vec_col="uv")
-    if k_cells is None:
-        k_cells = ivf.sized_cells(emb.count() if truncated else len(x), 2.0 * eps)
-    cents = ivf._lloyd(x, k_cells, kmeans_iters)
-    assigned = ivf.expanded_cells(
-        ivf.assign_cells(base, cents, vec_col="uv", out_col="cell"),
-        cents, vec_col="uv", out_col="cells", slack=2.0 * eps,
-    ).persist()
-    # candidate IDS first, distinct BEFORE scoring: each unordered pair can
-    # arrive through both directions of the expanded⋈primary join, and the
-    # exact-cosine fold is the expensive stage — score each pair once
-    a = assigned.select(F.col("sid").alias("a_id"), F.explode("cells").alias("cell"))
-    b = assigned.select(F.col("sid").alias("b_id"), "cell")
-    cand = (
-        a.join(b, "cell")
-        .where(F.col("a_id") != F.col("b_id"))
-        .select(
-            F.least("a_id", "b_id").alias("a_id"),
-            F.greatest("a_id", "b_id").alias("b_id"),
-        )
-        .distinct()
-    )
-    va = assigned.select(F.col("sid").alias("a_id"), F.col("v").alias("a_v"))
-    vb = assigned.select(F.col("sid").alias("b_id"), F.col("v").alias("b_v"))
-    return (
-        cand.join(va, "a_id")
-        .join(vb, "b_id")
-        .select("a_id", "b_id", cos.alias("cosine"))
-        .where(F.col("cosine") >= threshold)
-    )
-
-
-def embedding_dup_pairs_fast(
-    emb: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.4,
-    k_cells: int | None = None,
-    kmeans_iters: int = 5,
-) -> DataFrame:
-    """`embedding_dup_pairs` with the per-vector math in Arrow-batched BLAS.
-
-    Same candidate structure and the same all-pairs-equal answer (the
-    ε-complete theorem is about WHICH cells are probed, not how distances
-    are computed), but the two stages the expression form runs as
-    interpreted higher-order folds become numpy matrix ops:
+    Both per-vector stages are Arrow-batched BLAS:
 
     - **assignment + ε-expansion**: one ``mapInPandas`` pass emitting
       (sid, cell, is_primary) rows straight off a (batch × k) distance
-      matmul — the stage that runs over the whole corpus, which is exactly
-      where the interpreted ``F.aggregate`` fold was ~3 ms/row (measured:
-      6.3 s for 2 000 rows; fatal at any real scale);
+      matmul — the stage that runs over the whole corpus (an interpreted
+      Catalyst ``aggregate`` fold measured ~3 ms/row here: 6.3 s for
+      2 000 rows);
     - **exact-cosine verification**: per-cell block matmul via
       ``applyInPandas`` — each cell's (expanded × primary) similarity block
       is one BLAS call, and only pairs ≥ threshold ever leave Python, so
-      the expensive candidate set is never *materialized* as rows at all
-      (the expression form shuffles every candidate pair through a distinct
-      + two vector joins — ~2 GB of Arrow traffic here; this form shuffles
-      one (sid, cell, vector) row per probe, ~16 MB). A pair probing k
-      shared cells is scored k times and collapsed by ``distinct()`` —
-      identical doubles, because every block applies the exact formula of
-      ``similarity.brute_force_topk_pandas`` (raw-vector dot over norm
-      product, ``np.round(·, 6)``), which the DuckDB oracle already
-      hash-validates.
+      the candidate set is never *materialized* as rows at all (a
+      candidate-pair form shuffles every pair through a distinct + two
+      vector joins — ~2 GB of Arrow traffic here; this form shuffles one
+      (sid, cell, vector) row per probe, ~16 MB). A pair probing k shared
+      cells is scored k times and collapsed on its key; every block applies
+      the exact formula of ``similarity.brute_force_topk`` (raw-vector dot
+      over norm product, ``np.round(·, 6)``).
 
     Skew note (the 100 TB question): ``applyInPandas`` groups can't be
     split by AQE, so one pathological mega-cell becomes one long task —
@@ -1294,9 +1080,9 @@ def embedding_dup_pairs_fast(
     exceeds memory; the ε-expansion itself is unaffected by how the blocks
     are scored.
 
-    The oracle of the expression form applies unchanged: same pairs, same
-    rounded cosines. No corpus-side collect — the driver only ever holds
-    the k-means sample (bounded) and the k×d centroid matrix."""
+    NULL and zero vectors have no direction and drop out. No corpus-side
+    collect — the driver only ever holds the k-means sample (bounded) and
+    the k×d centroid matrix."""
     import math
 
     import numpy as np
@@ -1330,9 +1116,9 @@ def embedding_dup_pairs_fast(
         bound = scan_rows_upper_bound(emb)
         n_emb = bound if bound is not None and bound <= 2 * 4096 else emb.count()
         return _all_pairs_blocked(emb, id_col, vec_col, threshold, n_emb)
-    # ONE planning job (see embedding_dup_pairs): the fit sample doubles
-    # as the √N sizing probe; a separate count only when the sample
-    # truncated, i.e. the corpus outgrew sample_rows.
+    # ONE planning job: the fit sample doubles as the √N sizing probe; a
+    # separate count only when the sample truncated, i.e. the corpus
+    # outgrew sample_rows.
     x, truncated = ivf.kmeans_sample(emb, id_col=id_col, vec_col=vec_col)
     n_emb = emb.count() if truncated else len(x)
     if k_cells is None:
@@ -1351,9 +1137,7 @@ def embedding_dup_pairs_fast(
             if keep:
                 X = np.array([np.asarray(x, dtype=np.float64) for _, x in keep])
                 nrm = np.sqrt((X * X).sum(axis=1))
-                live = nrm > 0  # zero vectors have no direction: out, as in
-                # the expression form where their null unit vector falls
-                # out of the candidate join
+                live = nrm > 0  # zero vectors have no direction: out
                 sid_arr = [s for (s, _), ok in zip(keep, live) if ok]
                 Xl = X[live]
                 U = Xl / nrm[live, None]
@@ -1422,7 +1206,7 @@ def _all_pairs_blocked(
     block_rows: int = 4096,
 ) -> DataFrame:
     """EXACT all-pairs rounded-cosine ≥ threshold via blocked BLAS — the
-    slack ≥ 2 regime of ``embedding_dup_pairs_fast`` (every cell probed ⇒
+    slack ≥ 2 regime of ``embedding_dup_pairs`` (every cell probed ⇒
     candidates are all pairs by construction, so generate them directly
     with bounded memory instead of through cells).
 
@@ -1582,7 +1366,6 @@ def jaccard_prefix_pairs(
     text_col: str = "text",
     n: int = 3,
     threshold: float = 0.6,
-    pandas_shingles: bool = False,
     join_work_budget: int | None = 2_000_000_000,
 ) -> DataFrame:
     """Exact Jaccard near-dup pairs via PREFIX FILTERING (the PPJoin/
@@ -1621,10 +1404,8 @@ def jaccard_prefix_pairs(
     failing fast instead of the disk-filling grind the sf10 probe
     measured (a saturated 500k-doc corpus overflowed 77 GB of shuffle
     spill). ``None`` disables (run-at-any-cost audit)."""
-    shingler = _shingle_sets_pandas if pandas_shingles else _shingle_sets
-    src = df if pandas_shingles else spread(df, id_col)  # see ngram note
     sets = (
-        shingler(src, id_col, text_col, n)
+        _sid_keyed_sets(df, id_col, text_col, n)
         .select("sid", F.array_sort("sh").alias("sh"))
         .persist()
     )

@@ -10,9 +10,8 @@ it buys nothing. This module supplies the real path:
   the sample is an id-ordered prefix. At 100 TB the sample is a TABLESAMPLE
   collect (a few 10⁵ rows fits any driver); the *fit* is cheap — it's the
   *assignment* that must scale.
-- ``assign_cells``: broadcast the centroid matrix as array literals and
-  assign every vector JVM-side (aggregate-fold distances, argmin with idx
-  tie-break) — one scan, no shuffle, no Python.
+- ``assign_cells``: nearest-centroid assignment as one Arrow-batched BLAS
+  pass (argmin with lowest-index tie-break) — one scan, no shuffle.
 - ``ivf_search``: queries probe their ``nprobe`` nearest cells only.
 
 No SQL oracle: the fitted centroids depend on float reduction order inside
@@ -23,7 +22,7 @@ quality instead (tests/test_ivf.py).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window as W, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 from arrow_parquet_logs_spark.functions.vector import as_double_array
 
@@ -173,48 +172,19 @@ def _sq_dist(vec: Column, centroid: list[float]) -> Column:
 def assign_cells(
     emb: DataFrame, centroids: list[list[float]], vec_col: str = "embedding", out_col: str = "cell"
 ) -> DataFrame:
-    """Nearest-centroid assignment as pure Catalyst expressions: distances
-    to all k centroids as literal-array folds, argmin via a (dist, idx)
-    fold with index tie-break. No shuffle, no Python — but NOT codegen:
-    Spark evaluates higher-order ``aggregate``/``zip_with`` lambdas
-    interpreted per element (measured ~3 ms/row at k=16, d=64), so this
-    form is the oracle-shaped reference; the corpus-scale path is
-    ``assign_cells_pandas`` (one BLAS matmul per Arrow batch)."""
-    v = as_double_array(vec_col)
-    dists = [_sq_dist(v, c) for c in centroids]
-    # argmin with lowest-index tie-break: fold over (dist, idx) structs
-    pairs = F.array(
-        *[F.struct(d.alias("d"), F.lit(i).alias("i")) for i, d in enumerate(dists)]
-    )
-    best = F.aggregate(
-        pairs,
-        F.struct(F.lit(float("inf")).alias("d"), F.lit(-1).alias("i")),
-        lambda acc, p: F.when((p["d"] < acc["d"]), p).otherwise(acc),
-    )
-    return emb.withColumn(out_col, best["i"])
-
-
-def assign_cells_pandas(
-    emb: DataFrame, centroids: list[list[float]], vec_col: str = "embedding", out_col: str = "cell"
-) -> DataFrame:
-    """`assign_cells` with the distance math in Arrow-batched numpy.
-
-    The expression form's docstring promised codegen, but Catalyst evaluates
-    higher-order ``aggregate``/``zip_with`` lambdas *interpreted, per
-    element* — measured ~3 ms/row at k=16, d=64, which is fatal for the one
-    stage that must scan the whole corpus. Here each Arrow batch is one
-    (B × k) distance matmul: ``argmin(|x|² − 2x·cᵀ + |c|²)``. All other
-    columns pass through untouched; null vectors get a null cell (as in the
-    expression form, where a null array folds to a null distance).
+    """Nearest-centroid assignment, one Arrow-batched numpy pass: each
+    batch is one (B × k) distance matmul, ``argmin(|x|² − 2x·cᵀ + |c|²)``.
+    This is the one stage that must scan the whole corpus; as Catalyst
+    ``aggregate``/``zip_with`` folds over literal centroid arrays it ran
+    interpreted per element, ~3 ms/row at k=16, d=64. All other columns
+    pass through untouched; null vectors get a null cell.
 
     Assignment ties: numpy ``argmin`` takes the first (lowest-index)
-    minimum — the same tie-break the expression form's ``<`` fold encodes —
-    but the two forms sum distances in different float orders, so a pair of
-    *exactly* equidistant centroids could in principle split them. Cell
-    membership is a performance partition, not a semantic answer (search
-    correctness comes from scoring, dedup completeness from ε-expansion),
-    so either assignment is valid; tests pin them equal on the shipped
-    corpora."""
+    minimum. The BLAS form sums distances in its own float order, so an
+    *exactly* equidistant pair of centroids could split differently from
+    another engine's; cell membership is a performance partition, not a
+    semantic answer (search correctness comes from scoring, dedup
+    completeness from ε-expansion), so either assignment is valid."""
     import numpy as np
     from pyspark.sql import types as T
 
@@ -247,31 +217,6 @@ def assign_cells_pandas(
     return emb.mapInPandas(gen, out_schema)
 
 
-def expanded_cells(
-    emb: DataFrame,
-    centroids: list[list[float]],
-    vec_col: str = "embedding",
-    out_col: str = "cells",
-    slack: float = 0.0,
-) -> DataFrame:
-    """Multi-probe assignment: every cell whose centroid is within
-    ``nearest_distance + slack`` (L2). ``slack=0`` degenerates to the
-    primary cell; ``slack=2·ε`` makes a candidate join *ε-complete* (see
-    ``operators.dedup.embedding_dup_pairs``): for any pair with
-    ``‖a−b‖ ≤ ε``, b's primary cell is provably in a's expanded set
-    (two triangle-inequality hops: d(a,cb) ≤ ε + d(b,cb) ≤ 2ε + d(a,ca)).
-    Expression-only — transform/filter over a literal centroid array, no
-    shuffle, no Python — but interpreted per element like ``assign_cells``
-    (HOF lambdas are not codegen); ``dedup.embedding_dup_pairs_fast``
-    carries the vectorized equivalent for corpus-scale runs."""
-    v = as_double_array(vec_col)
-    dists = F.array(*[F.sqrt(_sq_dist(v, c)) for c in centroids])
-    dmin = F.array_min(dists)
-    structs = F.transform(dists, lambda d, i: F.struct(d.alias("d"), i.alias("i")))
-    kept = F.filter(structs, lambda s: s["d"] <= dmin + F.lit(float(slack)))
-    return emb.withColumn(out_col, F.transform(kept, lambda s: s["i"]))
-
-
 def ivf_search(
     emb: DataFrame,
     queries: DataFrame,
@@ -280,22 +225,19 @@ def ivf_search(
     nprobe: int = 4,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    pandas_assign: bool = True,
 ) -> DataFrame:
     """IVF top-k: candidates restricted to each query's ``nprobe`` nearest
     cells. Scan fraction ≈ nprobe/n_cells of the corpus per query batch.
-    Corpus-side assignment runs vectorized (``assign_cells_pandas``) by
-    default — it is the full-scan stage; ``pandas_assign=False`` keeps the
-    expression form. Query-side probe selection stays Catalyst either way
-    (the query batch is small by definition)."""
+    Corpus-side assignment is the full-scan stage and runs vectorized
+    (``assign_cells``); query-side probe selection stays Catalyst (the
+    query batch is small by definition)."""
     from arrow_parquet_logs_spark.operators.similarity import (
         _cos,
         _ranked,
         _with_vec_and_norm,
     )
 
-    assigner = assign_cells_pandas if pandas_assign else assign_cells
-    cells = assigner(emb, centroids, vec_col)
+    cells = assign_cells(emb, centroids, vec_col)
     c = _with_vec_and_norm(cells, id_col, vec_col, "c", "cell")
 
     q_assigned = queries
@@ -349,16 +291,12 @@ def materialize_cells(
     path: str,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    pandas_assign: bool = True,
 ) -> None:
     """Write the corpus **partitioned by cell** (Hive layout): the IVF
     inverted lists as directories. At 100 TB this is what makes nprobe
     real — a search reads only the probed cells' files via partition
-    pruning; every other cell is never opened. Assignment is the full-
-    corpus stage, so it runs vectorized by default (see
-    ``assign_cells_pandas``)."""
-    assigner = assign_cells_pandas if pandas_assign else assign_cells
-    assigned = assigner(emb.select(id_col, vec_col), centroids, vec_col)
+    pruning; every other cell is never opened."""
+    assigned = assign_cells(emb.select(id_col, vec_col), centroids, vec_col)
     # cluster on cell before the write: every assignment task holds rows of
     # every cell, so dynamic partitioning would write a file per
     # (task x cell) — the same small-file explosion fixed in
@@ -374,7 +312,6 @@ def append_to_cells(
     path: str,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    pandas_assign: bool = True,
 ) -> None:
     """Incrementally add vectors to a materialized cell-partitioned corpus:
     assign against the EXISTING centroids and append into the matching
@@ -383,8 +320,7 @@ def append_to_cells(
     ``materialize_cells`` rewrite (the OPTIMIZE analog) handles centroid
     drift. Readers see the same partition-pruned layout; dynamic partition
     append touches only the cells the batch lands in."""
-    assigner = assign_cells_pandas if pandas_assign else assign_cells
-    assigner(emb_new.select(id_col, vec_col), centroids, vec_col).repartition(
+    assign_cells(emb_new.select(id_col, vec_col), centroids, vec_col).repartition(
         "cell"
     ).write.mode(
         "append"

@@ -9,24 +9,22 @@ computation (ADC)**: per query, precompute the m×ks table of subspace dot
 products against every codebook entry; the approximate score of any stored
 vector is then m table lookups, never touching the original floats.
 
-Spark-first shape (the same explode→broadcast-join→partial-agg skeleton as
-``similarity.srp_signatures`` — every stage is whole-stage-codegen JVM
-arithmetic; the higher-order ``aggregate``/``zip_with`` lambda form was
-rejected because Spark interprets those per element, measured ~3 ms/row in
-``ivf.assign_cells``):
+Spark-first shape:
 
-- components explode to (id, dim, q) with integer micro-unit quantization
-  (floor(x·10⁶) — exact int64 arithmetic, no float-summation-order hazard),
-- the codebook broadcasts as a tiny (dim, code, value) frame (m·ks·d/m
-  rows — 1,024 at the default geometry),
-- encode: one broadcast join + two map-side-combinable aggregations
-  (distance per (id, subspace, code), then lexicographic (dist, code) min),
-- ADC: the query-side LUT is the same join shaped into (q_id, subspace,
-  code, partial-dot); scoring joins stored codes against the broadcast LUT
-  and sums — never touching raw vectors.
+- encode: one Arrow-batched numpy pass per corpus scan — components
+  quantize to integer micro-units (floor(x·10⁶) — exact int64 arithmetic,
+  no float-summation-order hazard) and each subvector takes its nearest
+  codebook entry, first-minimum tie-break. A Catalyst encode (explode →
+  broadcast codebook join → two aggregations) fans every vector into d·ks
+  joined rows and was rejected for that; the higher-order
+  ``aggregate``/``zip_with`` lambda form runs interpreted per element
+  (~3 ms/row measured for the same shape of fold in IVF cell assignment).
+- ADC: the query-side LUT (q_id, subspace, code, partial-dot) is built on
+  the driver; scoring joins stored codes against the broadcast LUT and
+  sums — never touching raw vectors.
 
 At 100 TB the stored codes are ~1/32 the corpus bytes, the per-row cost is
-m lookups, and every shuffle key is (id, subspace) — linear, skew-free.
+m lookups, and the encode adds no shuffle at all.
 
 Two codebook sources:
 
@@ -106,101 +104,36 @@ def fit_pq(
     ]
 
 
-def codebook_frame(spark: SparkSession, codebooks: list[list[list[int]]]) -> DataFrame:
-    """(d, c, s) broadcast frame: global component index, code id, integer
-    micro-unit codebook value. m·ks·sub rows — trivially broadcastable."""
-    sub = len(codebooks[0][0])
-    rows = [
-        (j * sub + t, c, int(s))
-        for j, book in enumerate(codebooks)
-        for c, entry in enumerate(book)
-        for t, s in enumerate(entry)
-    ]
-    return spark.createDataFrame(rows, "d int, c int, s long")
-
-
-def _components(df: DataFrame, id_col: str, vec_col: str, out_id: str) -> DataFrame:
-    """(id, d, q): exploded integer micro-unit components."""
-    return df.select(
-        F.col(id_col).alias(out_id), F.posexplode(F.col(vec_col)).alias("d", "x")
-    ).select(
-        out_id,
-        "d",
-        F.floor(F.col("x").cast("double") * F.lit(float(SCALE))).cast("bigint").alias("q"),
-    )
-
-
 def encode_pq(
     emb: DataFrame,
     codebooks: list[list[list[int]]],
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """PQ-encode every vector → (id, j, code) long-format codes.
+    """PQ-encode every vector → (id, j, code) long-format codes, one numpy
+    reduction per Arrow batch.
 
-    Broadcast join on component index fans each (id, d, q) row out to the
-    ks codebook entries of its subspace; squared-distance contributions
-    aggregate per (id, subspace, code) with map-side combine, and the code
-    is the lexicographic (dist, code) minimum — first-minimum tie-break,
-    identical in any engine. All int64; (q−s)² ≤ 9·10¹² and sub ≤ 64 keep
-    sums far from overflow."""
-    sub = len(codebooks[0][0])
-    cb = codebook_frame(emb.sparkSession, codebooks)
-    from arrow_parquet_logs_spark.operators._parallel import spread_for_python
-
-    # spread gate: the component explode + distance partial-agg run in the
-    # scan stage — serialize-proof on few-row-group local inputs (the
-    # pandas encode path already gates; this is the expression twin)
-    comps = _components(
-        spread_for_python(emb.select(id_col, vec_col)), id_col, vec_col, "pid"
-    )
-    dist = (
-        comps.join(F.broadcast(cb), "d")
-        .groupBy("pid", (F.col("d") / sub).cast("int").alias("j"), "c")
-        .agg(F.sum((F.col("q") - F.col("s")) * (F.col("q") - F.col("s"))).alias("dist"))
-    )
-    return (
-        dist.groupBy("pid", "j")
-        .agg(F.min(F.struct("dist", "c")).alias("best"))
-        .select(F.col("pid").alias(id_col), "j", F.col("best.c").alias("code"))
-    )
-
-
-def encode_pq_pandas(
-    emb: DataFrame,
-    codebooks: list[list[list[int]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    centroids: list[list[float]] | None = None,
-    cell_col: str = "cell",
-) -> DataFrame:
-    """:func:`encode_pq` / :func:`encode_ivfpq` with the distance math as
-    one numpy reduction per Arrow batch — the corpus-scale form (the
-    ``assign_cells_pandas`` lesson): the expression encode fans every
-    vector into d·ks joined rows through a shuffle, ~1000 rows per vector
-    at the default geometry, which is the dominant cost at billions of
-    vectors; here those rows never exist.
-
-    With ``centroids`` given, the input must carry ``cell_col`` (from
-    ``assign_cells_pandas``) and the RESIDUAL v − centroid[cell] is coded
-    (the IVF-PQ form). All arithmetic is the identical int64 micro-unit
-    grid, and numpy ``argmin`` takes the first minimum — the same
-    (dist, code) tie-break — so the output is bit-equal to the expression
-    forms (test-pinned), not merely statistically equivalent."""
+    Each subvector's code is the nearest codebook entry on the int64
+    micro-unit grid (floor(x·10⁶)); numpy ``argmin`` takes the first
+    minimum, i.e. the lexicographic (dist, code) tie-break, identical in
+    any engine. (q−s)² ≤ 9·10¹² and sub ≤ 64 keep sums far from overflow.
+    A join-and-aggregate encode in Catalyst fans every vector into d·ks
+    joined rows through a shuffle (~1000 rows per vector at the default
+    geometry); here those rows never exist. NULL vectors emit no codes."""
     import numpy as np
     from pyspark.sql import types as T
 
+    from arrow_parquet_logs_spark.operators._parallel import spread_for_python
+
     books = np.array(codebooks, dtype=np.int64)  # (m, ks, sub)
     m, _, sub = books.shape
-    cents_i = (
-        np.floor(np.array(centroids, dtype=np.float64) * SCALE).astype(np.int64)
-        if centroids is not None
-        else None
+    out_schema = T.StructType(
+        [
+            T.StructField(id_col, emb.schema[id_col].dataType),
+            T.StructField("j", T.IntegerType()),
+            T.StructField("code", T.IntegerType()),
+        ]
     )
-    fields = [T.StructField(id_col, emb.schema[id_col].dataType)]
-    if cents_i is not None:
-        fields.append(T.StructField(cell_col, T.IntegerType()))
-    out_schema = T.StructType(fields + [T.StructField("j", T.IntegerType()), T.StructField("code", T.IntegerType())])
 
     def gen(batches):
         import pandas as pd
@@ -211,27 +144,20 @@ def encode_pq_pandas(
                 continue
             X = np.array([np.asarray(pdf[vec_col].iloc[i], dtype=np.float64) for i in live])
             Q = np.floor(X * SCALE).astype(np.int64)  # (n, d)
-            if cents_i is not None:
-                cells = pdf[cell_col].to_numpy()[live].astype(np.int64)
-                Q = Q - cents_i[cells]
             n = len(live)
             codes = np.empty((n, m), dtype=np.int64)
             for j in range(m):
                 d2 = ((Q[:, j * sub : (j + 1) * sub][:, None, :] - books[j][None, :, :]) ** 2).sum(axis=2)
                 codes[:, j] = d2.argmin(axis=1)
-            ids = pdf[id_col].to_numpy()[live]
-            cols = {
-                id_col: np.repeat(ids, m),
-                "j": np.tile(np.arange(m, dtype=np.int32), n),
-                "code": codes.reshape(-1).astype(np.int32),
-            }
-            if cents_i is not None:
-                cols[cell_col] = np.repeat(cells, m).astype(np.int32)
-            yield pd.DataFrame(cols)[[f.name for f in out_schema.fields]]
+            yield pd.DataFrame(
+                {
+                    id_col: np.repeat(pdf[id_col].to_numpy()[live], m),
+                    "j": np.tile(np.arange(m, dtype=np.int32), n),
+                    "code": codes.reshape(-1).astype(np.int32),
+                }
+            )
 
-    from arrow_parquet_logs_spark.operators._parallel import spread_for_python
-
-    return spread_for_python(emb).mapInPandas(gen, out_schema)
+    return spread_for_python(emb.select(id_col, vec_col)).mapInPandas(gen, out_schema)
 
 
 def adc_lut(
@@ -301,27 +227,15 @@ def pq_adc_topk(
     k: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    pandas_encode: bool = False,
 ) -> DataFrame:
     """End-to-end compressed-domain top-k: encode corpus, build query LUTs,
     ADC-score, rank by (score desc, id) — deterministic integer ranking,
-    self-matches excluded.
-
-    ``pandas_encode=True`` swaps the corpus-side expression encode for the
-    bit-equal Arrow-batched one (:func:`encode_pq_pandas` — the
-    ``materialize_ivfpq`` default, pinned equal in tests/test_pq.py): the
-    expression encode fans every vector into d·ks joined rows through two
-    aggregation exchanges before a code exists, while the pandas encode
-    emits the m code rows per vector directly in the scan stage — the
-    corpus-scale form. Query-side LUTs stay expression-built either way
-    (query-sized)."""
+    self-matches excluded. The corpus encode (:func:`encode_pq`) emits the
+    m code rows per vector directly in the scan stage; the query-side LUT
+    is query-sized and built on the driver (:func:`adc_lut`)."""
     from pyspark.sql.window import Window as W
 
-    codes = (
-        encode_pq_pandas(emb.select(id_col, vec_col), codebooks, id_col, vec_col)
-        if pandas_encode
-        else encode_pq(emb, codebooks, id_col, vec_col)
-    )
+    codes = encode_pq(emb, codebooks, id_col, vec_col)
     lut = adc_lut(queries, codebooks, id_col, vec_col)
     scored = adc_scores(codes, lut, id_col).where(F.col("q_id") != F.col(id_col))
     # partial top-k first (operators.topk): the per-query window then ranks
@@ -347,20 +261,15 @@ def pq_rerank_topk(
     rerank: int = 50,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    pandas_encode: bool = False,
 ) -> DataFrame:
     """PQ-then-rerank: ADC ranks the whole corpus in the compressed domain,
     the top ``rerank`` candidates per query are re-scored with exact cosine
     (operators.similarity ranking contract), and the true top-k of that
     pool is returned. This is the production ANN shape: the expensive exact
-    math touches rerank·|queries| rows, not the corpus.
-    ``pandas_encode`` as in :func:`pq_adc_topk` (bit-equal encode swap)."""
+    math touches rerank·|queries| rows, not the corpus."""
     from arrow_parquet_logs_spark.operators.similarity import _cos, _ranked, _with_vec_and_norm
 
-    cand = pq_adc_topk(
-        emb, queries, codebooks, k=rerank, id_col=id_col, vec_col=vec_col,
-        pandas_encode=pandas_encode,
-    )
+    cand = pq_adc_topk(emb, queries, codebooks, k=rerank, id_col=id_col, vec_col=vec_col)
     c = _with_vec_and_norm(emb, id_col, vec_col, "c")
     q = _with_vec_and_norm(queries, id_col, vec_col, "q")
     # broadcast the CAND side (≤ rerank·Q rows BY CONSTRUCTION): its size
@@ -431,76 +340,27 @@ def fit_ivfpq(
     return [[float(v) for v in c] for c in cents], books
 
 
-def encode_ivfpq(
-    emb: DataFrame,
-    centroids: list[list[float]],
-    codebooks: list[list[list[int]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(id, cell, j, code): coarse cell + residual PQ codes, long format —
-    the join-ready inverted-list rows. Cell assignment runs vectorized
-    (BLAS); residual encode is the same broadcast-join aggregation as
-    :func:`encode_pq`, with the centroid's micro-unit components subtracted
-    component-wise before the codebook distance."""
-    from arrow_parquet_logs_spark.operators.ivf import assign_cells_pandas
-
-    spark = emb.sparkSession
-    sub = len(codebooks[0][0])
-    assigned = assign_cells_pandas(emb.select(id_col, vec_col), centroids, vec_col)
-    cent_rows = [
-        (cell, d, int(__import__("math").floor(v * SCALE)))
-        for cell, cen in enumerate(centroids)
-        for d, v in enumerate(cen)
-    ]
-    cents = spark.createDataFrame(cent_rows, "cell int, d int, cq long")
-    cb = codebook_frame(spark, codebooks)
-    comps = (
-        assigned.select(F.col(id_col).alias("pid"), "cell", F.posexplode(F.col(vec_col)).alias("d", "x"))
-        .select(
-            "pid",
-            "cell",
-            "d",
-            F.floor(F.col("x").cast("double") * F.lit(float(SCALE))).cast("bigint").alias("q"),
-        )
-        .join(F.broadcast(cents), ["cell", "d"])
-        .select("pid", "cell", "d", (F.col("q") - F.col("cq")).alias("r"))
-    )
-    dist = (
-        comps.join(F.broadcast(cb), "d")
-        .groupBy("pid", "cell", (F.col("d") / sub).cast("int").alias("j"), "c")
-        .agg(F.sum((F.col("r") - F.col("s")) * (F.col("r") - F.col("s"))).alias("dist"))
-    )
-    return (
-        dist.groupBy("pid", "cell", "j")
-        .agg(F.min(F.struct("dist", "c")).alias("best"))
-        .select(F.col("pid").alias(id_col), "cell", "j", F.col("best.c").alias("code"))
-    )
-
-
 def _ivfpq_codes(
     emb: DataFrame,
     centroids: list[list[float]],
     codebooks: list[list[list[int]]],
     id_col: str,
     vec_col: str,
-    pandas_encode: bool,
 ) -> DataFrame:
-    """(id, cell, j, code) for the corpus — the index-build scan.
+    """(id, cell, j, code) for the corpus — the index-build scan: coarse
+    cell + residual PQ codes, long format, the join-ready inverted-list
+    rows.
 
-    The pandas path runs assignment AND residual encode in ONE fused
-    Arrow pass: the two-stage form (``assign_cells_pandas`` →
-    ``encode_pq_pandas``) shipped every corpus vector across the
-    JVM↔Python boundary twice, with a round-robin repartition between
-    the stages (the second stage's spread gate sees a shuffle-rooted
-    frame) — at the corpus-dominant stage that is 2× the Arrow traffic
-    and one extra full exchange for zero extra work. Same math, same
-    ints, same first-minimum tie-breaks (cell assignment per
-    ``assign_cells_pandas``'s BLAS form, residual codes per
-    ``encode_pq_pandas``) — bit-equality vs the expression encode is
-    pinned in tests/test_pq.py."""
-    if not pandas_encode:
-        return encode_ivfpq(emb, centroids, codebooks, id_col, vec_col)
+    Assignment AND residual encode run in ONE fused Arrow pass: a
+    two-stage form (``ivf.assign_cells`` → :func:`encode_pq` on the
+    residual) would ship every corpus vector across the JVM↔Python
+    boundary twice, with a round-robin repartition between the stages
+    (the second stage's spread gate sees a shuffle-rooted frame) — at the
+    corpus-dominant stage that is 2× the Arrow traffic and one extra full
+    exchange for zero extra work. Cell assignment is ``ivf.assign_cells``'s
+    BLAS argmin; the residual v − centroid[cell] is coded on
+    :func:`encode_pq`'s int64 micro-unit grid with the same first-minimum
+    tie-break."""
     import numpy as np
     from pyspark.sql import types as T
 
@@ -558,7 +418,6 @@ def materialize_ivfpq(
     path: str,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    pandas_encode: bool = True,
 ) -> None:
     """Write the IVF-PQ index as a ``cell=``-partitioned parquet of code
     rows. At 100 TB this is the whole point of the composition: a search
@@ -571,10 +430,6 @@ def materialize_ivfpq(
     (``load_ivfpq_model``) instead of re-fitting — a re-fit on a changed
     corpus would silently mis-decode every stored code.
 
-    Encoding runs vectorized by default (``pandas_encode`` — one numpy
-    reduction per Arrow batch, bit-equal to the expression form) because
-    this is the stage that scans the whole corpus.
-
     Codes are CLUSTERED before the write: without it, every encode task
     holds rows of every cell and dynamic partitioning writes a file per
     (task × cell) — measured 503 files for a 16-cell sf0.1 index, and the
@@ -583,7 +438,7 @@ def materialize_ivfpq(
     file per cell = one writer task per cell): cells split into that many
     hash sub-buckets, sized so each file lands near the parquet sweet
     spot."""
-    enc = _ivfpq_codes(emb, centroids, codebooks, id_col, vec_col, pandas_encode)
+    enc = _ivfpq_codes(emb, centroids, codebooks, id_col, vec_col)
     enc = _cluster_by_cell(enc, id_col)
     enc.write.mode("overwrite").partitionBy("cell").parquet(path)
     save_ivfpq_model(centroids, codebooks, path)
@@ -641,7 +496,6 @@ def append_to_ivfpq(
     path: str,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    pandas_encode: bool = True,
 ) -> None:
     """Incrementally add vectors to a materialized IVF-PQ index: encode
     against the EXISTING centroids/codebooks and append into the matching
@@ -649,7 +503,7 @@ def append_to_ivfpq(
     the batch lands in). The fit amortizes over many ingest batches; a
     periodic re-fit + full rewrite handles centroid/codebook drift — the
     same maintenance contract as ``ivf.append_to_cells``."""
-    enc = _ivfpq_codes(emb_new, centroids, codebooks, id_col, vec_col, pandas_encode)
+    enc = _ivfpq_codes(emb_new, centroids, codebooks, id_col, vec_col)
     enc = _cluster_by_cell(enc, id_col)
     enc.write.mode("append").partitionBy("cell").parquet(path)
 
@@ -663,7 +517,6 @@ def split_hot_cells(
     vec_col: str = "embedding",
     iters: int = 5,
     sample_rows: int = 100_000,
-    pandas_encode: bool = True,
 ) -> tuple[list[list[float]], dict[int, tuple[int, int]]]:
     """Re-balance a materialized IVF-PQ index by SPLITTING hot cells —
     the FAISS-style maintenance step the incremental ingest path
@@ -724,7 +577,7 @@ def split_hot_cells(
         new_cents[c] = [float(v) for v in kids[0]]
         new_cents.append([float(v) for v in kids[1]])
         splits[c] = (c, new_idx)
-        enc = _ivfpq_codes(vecs, kids, books, id_col, vec_col, pandas_encode)
+        enc = _ivfpq_codes(vecs, kids, books, id_col, vec_col)
         enc = enc.withColumn(
             "cell", F.when(F.col("cell") == 0, F.lit(c)).otherwise(F.lit(new_idx))
         )
@@ -748,7 +601,6 @@ def start_stream_ivfpq_ingest(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     available_now: bool = True,
-    pandas_encode: bool = True,
 ):
     """Self-maintaining ANN index: apply each micro-batch of an embedding
     stream as an ``append_to_ivfpq`` (foreachBatch — the same Structured
@@ -766,8 +618,7 @@ def start_stream_ivfpq_ingest(
         if batch_df.isEmpty():
             return
         append_to_ivfpq(
-            batch_df, centroids, codebooks, path,
-            id_col=id_col, vec_col=vec_col, pandas_encode=pandas_encode,
+            batch_df, centroids, codebooks, path, id_col=id_col, vec_col=vec_col
         )
 
     writer = emb_stream.writeStream.foreachBatch(_apply).option(
@@ -920,7 +771,6 @@ def start_stream_ivfpq_ingest_maintained(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     available_now: bool = True,
-    pandas_encode: bool = True,
     max_split_rounds: int = 8,
 ):
     """Self-MAINTAINING streaming ingest: ``start_stream_ivfpq_ingest``
@@ -965,7 +815,7 @@ def start_stream_ivfpq_ingest_maintained(
         apply_ivfpq_ingest_batch(
             spark, batch_df, batch_id, path, checkpoint, emb_lookup,
             max_cell_rows, id_col=id_col, vec_col=vec_col,
-            pandas_encode=pandas_encode, max_split_rounds=max_split_rounds,
+            max_split_rounds=max_split_rounds,
         )
 
     writer = emb_stream.writeStream.foreachBatch(_apply).option(
@@ -1040,7 +890,6 @@ def apply_ivfpq_ingest_batch(
     max_cell_rows: int,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    pandas_encode: bool = True,
     max_split_rounds: int = 8,
 ) -> bool:
     """One (append → maintain) pair with the idempotence protocol of
@@ -1112,14 +961,10 @@ def apply_ivfpq_ingest_batch(
     with open(inflight, "w", encoding="utf-8") as fh:
         fh.write(f"{ckpt_key}:{int(batch_id)}")
     cents, books = load_ivfpq_model(path)
-    append_to_ivfpq(
-        batch_df, cents, books, path,
-        id_col=id_col, vec_col=vec_col, pandas_encode=pandas_encode,
-    )
+    append_to_ivfpq(batch_df, cents, books, path, id_col=id_col, vec_col=vec_col)
     maintain_ivfpq(
         spark, path, emb_lookup, max_cell_rows,
-        id_col=id_col, vec_col=vec_col,
-        pandas_encode=pandas_encode, max_split_rounds=max_split_rounds,
+        id_col=id_col, vec_col=vec_col, max_split_rounds=max_split_rounds,
     )
     _ledger_commit(path, ckpt_key, batch_id)
     os.remove(inflight)
@@ -1133,7 +978,6 @@ def maintain_ivfpq(
     max_cell_rows: int,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    pandas_encode: bool = True,
     max_split_rounds: int = 8,
 ) -> int:
     """Split hot cells until the index is balanced (≤ ``max_cell_rows``
@@ -1144,8 +988,7 @@ def maintain_ivfpq(
     total = 0
     for _ in range(max_split_rounds):
         _, splits = split_hot_cells(
-            spark, path, emb_lookup, max_cell_rows,
-            id_col=id_col, vec_col=vec_col, pandas_encode=pandas_encode,
+            spark, path, emb_lookup, max_cell_rows, id_col=id_col, vec_col=vec_col
         )
         if not splits:
             break

@@ -1,20 +1,23 @@
 """Similarity search over embedding columns.
 
 - ``brute_force_topk``: exact top-k neighbors for a (small) query set — the
-  query side is broadcast, candidates stream through one scan, ranking is a
-  window on rounded cosine with an id tie-break (deterministic under any
-  partitioning).
+  query matrix is broadcast and every Arrow batch of candidates is scored
+  with one BLAS matmul, keeping a per-query top-(k+1) per partition; a
+  window on rounded cosine with an id tie-break ranks the survivors
+  (deterministic under any partitioning).
 - ``ivf_topk``: candidates restricted to the query's pre-assigned coarse
   cell, cutting the scanned fraction to |cell|/N per query (the metadata-
   cell form; ``operators.ivf`` supplies the LEARNED k-means cells, nprobe
   search, and the materialized cell-partitioned layout — the real scale
   path). Same output contract.
-- ``knn_label_vote``: majority-label classification on top of either.
+- ``knn_label_vote``: majority-label classification on top of
+  ``brute_force_topk``.
 
-Cosine runs as Catalyst ``zip_with``/``aggregate`` in double precision
-(functions.vector) — no UDFs. Ranking keys round to 6 decimals so float
-summation-order noise can't flip an ordering between engines or cluster
-layouts.
+The shortlist scorers (``ivf_topk``, ``binary_quantized_topk``,
+``srp_lsh_topk``) compute cosine as Catalyst ``zip_with``/``aggregate`` in
+double precision (functions.vector) — no UDFs. Every form rounds ranking
+keys to 6 decimals so float summation-order noise can't flip an ordering
+between engines or cluster layouts.
 """
 
 from __future__ import annotations
@@ -73,30 +76,6 @@ def _ranked(pairs: DataFrame, k: int, prune: bool = True) -> DataFrame:
         .select("q_id", "vec_id", "cosine", "rn")
         .orderBy("q_id", "rn")
     )
-
-
-def brute_force_topk(
-    emb: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Exact ANN baseline: broadcast queries × one pass over candidates.
-
-    The candidate side passes through the spread gate: the Q·d cosine
-    folds per row are the dominant cost and run in the scan stage, so a
-    few-row-group local input would serialize the whole scoring pass on
-    one core (parquet byte splits without row groups carry no rows). At
-    cluster scale the gate no-ops."""
-    q = _with_vec_and_norm(queries, id_col, vec_col, "q")
-    c = spread_for_python(_with_vec_and_norm(emb, id_col, vec_col, "c"))
-    pairs = (
-        c.crossJoin(F.broadcast(q))
-        .where(F.col("c_id") != F.col("q_id"))
-        .select("q_id", F.col("c_id").alias("vec_id"), _cos().alias("cosine"))
-    )
-    return _ranked(pairs, k)
 
 
 def ivf_topk(
@@ -279,7 +258,7 @@ def binary_quantized_topk(
     return _ranked(rer, k, prune=False)
 
 
-def brute_force_topk_pandas(
+def brute_force_topk(
     emb: DataFrame,
     queries: DataFrame,
     k: int = 5,
@@ -287,29 +266,35 @@ def brute_force_topk_pandas(
     vec_col: str = "embedding",
     q_rows=None,
 ) -> DataFrame:
-    """The Arrow-batched BLAS formulation of ``brute_force_topk``.
+    """Exact top-k cosine neighbours for a (small) query batch, scored as
+    Arrow-batched BLAS.
 
     ``q_rows``: pre-collected ``[(id, vector), ...]`` for the query batch
     (must equal ``queries``'s rows) — callers already holding the vectors
     driver-side (the k-means fit sample slice) skip this function's own
     collect job (r12 job-chain collapse).
 
-    This is the one place the pandas-UDF path beats Catalyst expressions:
-    a dense f64 matmul (candidates-batch × queriesᵀ) through numpy's BLAS
-    versus an element-wise fold per pair. The query matrix rides to executors
-    as a broadcast variable; each ``mapInPandas`` batch emits only its
-    per-query top-(k+1) (judge r7: emitting the full batch × Q block moved
-    Q·n rows to the shuffle when Q·k·⌈n/batch⌉ suffice — ~1000× less at
-    sf10 geometry; the +1 covers the self-pair, filtered downstream);
-    batch-local selection uses the SAME total order as the final Catalyst
-    window (rounded cosine desc, id asc), so results are bit-unchanged.
-    Zero-norm candidate vectors yield NaN cosines both before and after
-    this change (callers drop them upstream, as the dedup family does)."""
+    A dense f64 matmul (candidates-batch × queriesᵀ) through numpy's BLAS
+    replaces an element-wise fold per pair. The query matrix rides to
+    executors as a broadcast variable; each ``mapInPandas`` partition emits
+    only its per-query top-(k+1) (judge r7: emitting the full batch × Q
+    block moved Q·n rows to the shuffle when Q·k·⌈n/batch⌉ suffice — ~1000×
+    less at sf10 geometry; the +1 covers the self-pair, filtered
+    downstream); batch-local selection uses the SAME total order as the
+    final Catalyst window (rounded cosine desc, id asc), so results are
+    bit-unchanged. The candidate scan passes through the spread gate: the
+    Q·d scoring is the dominant cost, and a few-row-group local input would
+    otherwise run it on one core.
+
+    NULL vectors carry no direction: NULL query rows and NULL candidate
+    rows are skipped. Zero-norm candidate vectors yield NaN cosines (callers
+    drop them upstream, as the dedup family does)."""
     import numpy as np
 
     sc = emb.sparkSession.sparkContext
     if q_rows is None:
         q_rows = queries.select(id_col, vec_col).collect()
+    q_rows = [r for r in q_rows if r[1] is not None]
     if not q_rows:  # empty query set → empty result, correct schema
         return emb.sparkSession.createDataFrame([], "q_id long, vec_id long, cosine double, rn int")
     q_ids = np.array([r[0] for r in q_rows], dtype=np.int64)
@@ -359,7 +344,8 @@ def brute_force_topk_pandas(
                 }
             )
 
-    pairs = spread_for_python(emb.select(id_col, vec_col)).mapInPandas(
+    src = emb.select(id_col, vec_col).where(F.col(vec_col).isNotNull())
+    pairs = spread_for_python(src).mapInPandas(
         score, schema="q_id long, vec_id long, cosine double"
     ).where(F.col("vec_id") != F.col("q_id"))
     # output is ≤ (k+1)·Q rows per partition by construction: the window
@@ -736,7 +722,7 @@ def filtered_topk(
     filtered = emb.where(predicate)
     n = filtered.count()  # the strategy probe — one count against the pushed-down scan
     if n <= brute_cap:
-        return brute_force_topk_pandas(filtered, queries, k, id_col, vec_col)
+        return brute_force_topk(filtered, queries, k, id_col, vec_col)
     if centroids is None:
         raise ValueError(
             f"{n} survivors exceed brute_cap={brute_cap}: the IVF path needs centroids"

@@ -405,7 +405,8 @@ def contamination_coverage(
         # persisted and SHARED between the bitmap build and the phase-2
         # exact join: without the persist the reference corpus is windowed
         # and distinct-shuffled twice, which at test scale cost more than
-        # the prefilter saved (measured, tools/decon_ab_probe.py)
+        # the prefilter saved (measured; SCALING.md "Bloom decontamination
+        # mode: measured, with its crossover")
         bkeys = bkeys.persist()
         if fingerprint:
             def _bk(c):

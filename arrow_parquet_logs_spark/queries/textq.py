@@ -231,7 +231,7 @@ _JACCARD_ORACLE = f"""
 )
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact n-gram-Jaccard near-dup pairs (threshold 0.6) via inverted-index
-    self-join."""
+    self-join; the shingle stage is one Arrow-batched mapInPandas pass."""
     docs = load_table(spark, sf_dir, "documents")
     return D.ngram_jaccard_pairs(docs, threshold=0.6)
 
@@ -243,12 +243,10 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench=True,
 )
 def dedup_ngram_jaccard_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same exact-Jaccard pipeline with the shingle stage as one Arrow-
-    batched mapInPandas pass — identical output under the identical oracle;
-    the Catalyst expression form above stays as the oracle-shaped
-    reference."""
+    """The same operator call as `dedup_ngram_jaccard`, registered under the
+    name the bench mix runs. Identical oracle."""
     docs = load_table(spark, sf_dir, "documents")
-    return D.ngram_jaccard_pairs(docs, threshold=0.6, pandas_shingles=True)
+    return D.ngram_jaccard_pairs(docs, threshold=0.6)
 
 
 @register(
@@ -328,7 +326,9 @@ _MINHASH_ORACLE = f"""
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash(32) + LSH(8×4) candidate pairs, Jaccard-verified at 0.6.
     The oracle reproduces signatures and banding exactly (portable md5
-    hashes), so the probabilistic pipeline is still hash-checkable."""
+    hashes), so the probabilistic pipeline is still hash-checkable. The
+    signature stage is one Arrow-batched mapInPandas pass (numpy affine
+    matrix per doc)."""
     docs = load_table(spark, sf_dir, "documents")
     return D.minhash_lsh_pairs(docs, threshold=0.6)
 
@@ -340,13 +340,10 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench=True,
 )
 def dedup_minhash_lsh_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same MinHash-LSH pipeline with the signature stage as one Arrow-
-    batched mapInPandas pass (numpy affine matrix per doc) — identical
-    output under the identical oracle, ~5× faster: the Catalyst shingle
-    builder evaluates interpreted higher-order functions per element. The
-    expression form above stays registered as the oracle-shaped reference."""
+    """The same operator call as `dedup_minhash_lsh`, registered under the
+    name the bench mix runs. Identical oracle."""
     docs = load_table(spark, sf_dir, "documents")
-    return D.minhash_lsh_pairs_pandas(docs, threshold=0.6)
+    return D.minhash_lsh_pairs(docs, threshold=0.6)
 
 
 @register(
@@ -543,10 +540,9 @@ def dedup_lsh_cdc_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = VersionedTable(spark, f"{root}/tbl", key_cols=["doc_id"])
     t.write(docs.where(F.col("doc_id") % 3 == 0))
     idx = f"{root}/idx"
-    D.materialize_minhash_index(t.read(), idx, pandas_sigs=True)
-    # pairs inside the initial load: the one-time batch pass (pandas
-    # signature stage — bit-identical to the expression form, ~5x faster)
-    parts = [D.minhash_lsh_pairs_pandas(t.read(), threshold=0.6, collapse_exact=False)]
+    D.materialize_minhash_index(t.read(), idx)
+    # pairs inside the initial load: the one-time batch pass
+    parts = [D.minhash_lsh_pairs(t.read(), threshold=0.6, collapse_exact=False)]
     for i in (1, 2):
         pre_v = t.history()[-1]["version"]
         t.upsert(docs.where(F.col("doc_id") % 3 == i))
@@ -556,10 +552,10 @@ def dedup_lsh_cdc_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         corpus_prev = t.read(version=pre_v)  # time-travel text lookup
         parts.append(
             D.minhash_pairs_incremental(
-                spark, idx, ins, corpus_prev, threshold=0.6, pandas_sigs=True
+                spark, idx, ins, corpus_prev, threshold=0.6
             )
         )
-        D.append_to_minhash_index(ins, idx, pandas_sigs=True)
+        D.append_to_minhash_index(ins, idx)
     out = parts[0]
     for p_ in parts[1:]:
         out = out.unionByName(p_)
@@ -635,7 +631,7 @@ def dedup_cdc_cluster_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = VersionedTable(spark, f"{root}/tbl", key_cols=["doc_id"])
     t.write(docs.where(F.col("doc_id") % 3 == 0))
     idx = f"{root}/idx"
-    D.materialize_minhash_index(t.read(), idx, pandas_sigs=True)
+    D.materialize_minhash_index(t.read(), idx)
     cstate = VersionedTable(spark, f"{root}/clusters", key_cols=["doc_id"])
     have_state = False
 
@@ -648,7 +644,7 @@ def dedup_cdc_cluster_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
             (cstate.upsert if have_state else cstate.write)(upd)
             have_state = True
 
-    fold(D.minhash_lsh_pairs_pandas(t.read(), threshold=0.6, collapse_exact=False))
+    fold(D.minhash_lsh_pairs(t.read(), threshold=0.6, collapse_exact=False))
     for i in (1, 2):
         pre_v = t.history()[-1]["version"]
         t.upsert(docs.where(F.col("doc_id") % 3 == i))
@@ -657,10 +653,10 @@ def dedup_cdc_cluster_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
         ins = feed.where(F.col("_change_type") == "insert").select("doc_id", "text")
         fold(
             D.minhash_pairs_incremental(
-                spark, idx, ins, t.read(version=pre_v), threshold=0.6, pandas_sigs=True
+                spark, idx, ins, t.read(version=pre_v), threshold=0.6
             )
         )
-        D.append_to_minhash_index(ins, idx, pandas_sigs=True)
+        D.append_to_minhash_index(ins, idx)
     if not have_state:
         # dup-free corpus: no commit ever produced pairs, so the clusters
         # table was never written — return the empty typed frame rather
@@ -1305,7 +1301,7 @@ def pipeline_training_set(spark: SparkSession, sf_dir: str) -> DataFrame:
     kept1 = docs.withColumn("rn", rn).where(F.col("rn") == 1).drop("rn")
     # kept1 is already exact-deduped by the window above — skip the
     # operator's own exact-collapse (it would be a no-op plus one shuffle)
-    pairs = D.minhash_lsh_pairs_pandas(kept1, threshold=0.6, collapse_exact=False)
+    pairs = D.minhash_lsh_pairs(kept1, threshold=0.6, collapse_exact=False)
     dropped = pairs.select(F.col("b_id").alias("doc_id")).distinct()
     kept2 = kept1.join(dropped, "doc_id", "left_anti")
     feats = X.quality_features(kept2).select("doc_id", "n_tokens", "quality_score")
@@ -1876,9 +1872,11 @@ def docs_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side combined. The 60-bit portable hash keeps collision rate
     ~n²/2⁶⁰ (negligible at 100 TB window counts) and lets the oracle
     reproduce every hash bit-for-bit."""
-    # D.spread: the window hashing pipelines off the scan; a single-file
+    from arrow_parquet_logs_spark.operators._parallel import spread_for_python
+
+    # spread gate: the window hashing pipelines off the scan; a single-file
     # corpus would md5 every window in one task (sf1-probe defect class)
-    docs = D.spread(load_table(spark, sf_dir, "documents"), "doc_id")
+    docs = spread_for_python(load_table(spark, sf_dir, "documents"))
     toks = docs.select("doc_id", X.tokens("text").alias("t"))
     starts = F.when(
         F.size("t") >= 8, F.sequence(F.lit(0), F.size("t") - 8, F.lit(4))

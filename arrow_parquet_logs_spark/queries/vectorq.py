@@ -10,10 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from arrow_parquet_logs_spark.operators import similarity as S
-from arrow_parquet_logs_spark.operators.dedup import (
-    embedding_dup_pairs,
-    embedding_dup_pairs_fast,
-)
+from arrow_parquet_logs_spark.operators.dedup import embedding_dup_pairs
 from arrow_parquet_logs_spark.operators.topk import partial_topk
 from arrow_parquet_logs_spark.queries.catalog import register, scratch_dir
 from arrow_parquet_logs_spark.sources.tables import load_table
@@ -41,8 +38,8 @@ _COS = "round(list_cosine_similarity(CAST({a} AS DOUBLE[]), CAST({b} AS DOUBLE[]
 )
 def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-5 for a 10-query set: broadcast queries, one
-    candidate scan, window rank — the exact baseline every ANN variant is
-    measured against."""
+    candidate scan scored as Arrow-batched BLAS, window rank — the exact
+    baseline every ANN variant is measured against."""
     emb = load_table(spark, sf_dir, "embeddings")
     return S.brute_force_topk(emb, emb.where(F.col("vec_id") < 10), k=5)
 
@@ -128,11 +125,12 @@ def ann_binary_quantized_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench=True,
 )
 def ann_cosine_topk_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same contract as ann_cosine_topk, computed as an Arrow-batched BLAS
-    matmul in mapInPandas — the justified pandas-UDF case (dense linear
-    algebra the expression engine can't fuse). Identical oracle."""
+    """The same operator call as ann_cosine_topk (an Arrow-batched BLAS
+    matmul in mapInPandas — dense linear algebra the expression engine
+    can't fuse), registered under the name the bench mix runs. Identical
+    oracle."""
     emb = load_table(spark, sf_dir, "embeddings")
-    return S.brute_force_topk_pandas(emb, emb.where(F.col("vec_id") < 10), k=5)
+    return S.brute_force_topk(emb, emb.where(F.col("vec_id") < 10), k=5)
 
 
 @register(
@@ -191,14 +189,14 @@ def ann_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents = ivf._lloyd(x, 16, 5)
     qrows = [(int(i), v.tolist()) for i, v in zip(ids, x) if i < 10]
     approx = ivf.ivf_search(emb, q, cents, k=5, nprobe=4).select("q_id", "vec_id")
-    # exact side of the recall gate: BLAS matmul form (bit-equal ranking
-    # contract; both forms pass the same oracle at every SF) — guide §4.2.
+    # exact side of the recall gate: the BLAS brute force (its ranking
+    # contract passes the ann_cosine_topk oracle at every SF) — guide §4.2.
     # PERSISTED: the gate consumes this ≤ k·Q-row frame twice (semi-join
     # probe + q_id spine), and a subtree behind a Python stage is never
     # plan-shared — unpersisted, the corpus-sized BLAS scan ran TWICE per
     # gate (two full MapInPandas passes in the executed plan, r12 profile)
     exact = (
-        S.brute_force_topk_pandas(emb, q, k=5, q_rows=qrows)
+        S.brute_force_topk(emb, q, k=5, q_rows=qrows)
         .select("q_id", "vec_id")
         .persist()
     )
@@ -314,14 +312,12 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench=True,
 )
 def dedup_embedding_cosine_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The BLAS formulation of `dedup_embedding_cosine` (operators.dedup.
-    embedding_dup_pairs_fast): identical ε-complete candidate structure and
-    the identical all-pairs answer, with assignment/expansion and pair
-    scoring as Arrow-batched numpy instead of interpreted Catalyst folds.
-    This is the bench/production form; the expression form stays as the
-    oracle-shaped reference — both hash against the same brute-force SQL."""
+    """The same operator call as `dedup_embedding_cosine` (operators.dedup.
+    embedding_dup_pairs: ε-complete cells, assignment/expansion and pair
+    scoring as Arrow-batched numpy), registered under the name the bench
+    mix runs. Identical brute-force SQL oracle."""
     emb = load_table(spark, sf_dir, "embeddings")
-    return embedding_dup_pairs_fast(emb, threshold=0.4)
+    return embedding_dup_pairs(emb, threshold=0.4)
 
 
 @register(
@@ -362,7 +358,7 @@ def dedup_semantic_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     redundant examples.
 
     Composition of two already-verified operators: ε-complete IVF near-dup
-    pairs (`embedding_dup_pairs_fast`) feed iterative min-label propagation
+    pairs (`embedding_dup_pairs`) feed iterative min-label propagation
     (`connected_components`); singletons (no pair) keep themselves. The
     oracle replays it as brute-force cosine pairs + a recursive-CTE
     transitive closure — the same closure shape that checks
@@ -371,7 +367,7 @@ def dedup_semantic_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     from arrow_parquet_logs_spark.operators.dedup import connected_components
 
     emb = load_table(spark, sf_dir, "embeddings")
-    pairs = embedding_dup_pairs_fast(emb, threshold=0.4)
+    pairs = embedding_dup_pairs(emb, threshold=0.4)
     cc = connected_components(pairs).withColumnRenamed("doc_id", "id")
     return (
         emb.select("vec_id")
@@ -668,15 +664,13 @@ def embeddings_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     tie-break), the per-query lookup tables, AND the compressed-domain
     top-5 ranking are all exact int64 arithmetic — bit-identical in both
     engines. This pins the whole PQ machinery; learned codebooks swap in
-    via ann_pq_rerank. Encode runs vectorized (``pandas_encode`` — the
-    bit-equal Arrow-batched form, same oracle hash): the expression encode
-    shuffles d·ks fan-out rows per vector through two aggregations, the
-    corpus-dominant cost at scale (encode_pq_pandas docstring)."""
+    via ann_pq_rerank. Encode is one Arrow-batched numpy pass in the scan
+    stage (operators.pq.encode_pq), the corpus-dominant cost at scale."""
     from arrow_parquet_logs_spark.operators import pq as PQ
 
     emb = load_table(spark, sf_dir, "embeddings")
     q = emb.where(F.col("vec_id") < 10)
-    return PQ.pq_adc_topk(emb, q, PQ.rademacher_codebooks(), k=5, pandas_encode=True)
+    return PQ.pq_adc_topk(emb, q, PQ.rademacher_codebooks(), k=5)
 
 
 @register(
@@ -717,17 +711,15 @@ def ann_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the id-ordered prefix also supplies the query vectors (vec_id < 10
     # is in the prefix by construction) — no separate collect job
     qrows = [(int(i), v.tolist()) for i, v in zip(ids, x) if i < 10]
-    approx = PQ.pq_rerank_topk(
-        emb, q, cbs, k=5, rerank=rerank, pandas_encode=True
-    ).select("q_id", "vec_id")
-    # exact side of the recall gate: BLAS matmul form (bit-equal ranking
-    # contract; both forms pass the same oracle at every SF) — guide §4.2.
+    approx = PQ.pq_rerank_topk(emb, q, cbs, k=5, rerank=rerank).select("q_id", "vec_id")
+    # exact side of the recall gate: the BLAS brute force (its ranking
+    # contract passes the ann_cosine_topk oracle at every SF) — guide §4.2.
     # PERSISTED: the gate consumes this ≤ k·Q-row frame twice (semi-join
     # probe + q_id spine), and a subtree behind a Python stage is never
     # plan-shared — unpersisted, the corpus-sized BLAS scan ran TWICE per
     # gate (two full MapInPandas passes in the executed plan, r12 profile)
     exact = (
-        S.brute_force_topk_pandas(emb, q, k=5, q_rows=qrows)
+        S.brute_force_topk(emb, q, k=5, q_rows=qrows)
         .select("q_id", "vec_id")
         .persist()
     )
@@ -795,14 +787,14 @@ def ann_ivfpq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, path, emb, q, cents, books, k=5, nprobe=4, rerank=rerank,
         qrows=qrows,
     ).select("q_id", "vec_id")
-    # exact side of the recall gate: BLAS matmul form (bit-equal ranking
-    # contract; both forms pass the same oracle at every SF) — guide §4.2.
+    # exact side of the recall gate: the BLAS brute force (its ranking
+    # contract passes the ann_cosine_topk oracle at every SF) — guide §4.2.
     # PERSISTED: the gate consumes this ≤ k·Q-row frame twice (semi-join
     # probe + q_id spine), and a subtree behind a Python stage is never
     # plan-shared — unpersisted, the corpus-sized BLAS scan ran TWICE per
     # gate (two full MapInPandas passes in the executed plan, r12 profile)
     exact = (
-        S.brute_force_topk_pandas(emb, q, k=5, q_rows=qrows)
+        S.brute_force_topk(emb, q, k=5, q_rows=qrows)
         .select("q_id", "vec_id")
         .persist()
     )
@@ -1495,7 +1487,7 @@ def ann_ivfpq_hot_cell_split(spark: SparkSession, sf_dir: str) -> DataFrame:
       guarantees hot cells at any SF)."""
 
     from arrow_parquet_logs_spark.operators import pq as PQ
-    from arrow_parquet_logs_spark.operators.ivf import assign_cells_pandas
+    from arrow_parquet_logs_spark.operators.ivf import assign_cells
 
     emb = load_table(spark, sf_dir, "embeddings")
     live = emb.where(F.col("embedding").isNotNull())
@@ -1520,19 +1512,18 @@ def ann_ivfpq_hot_cell_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     }
     # from-scratch hierarchical rebuild: root argmin over ORIGINAL
     # centroids, split roots re-assigned between their two children
-    assigned = assign_cells_pandas(live.select("vec_id", "embedding"), cents)
+    assigned = assign_cells(live.select("vec_id", "embedding"), cents)
     hot = sorted(splits)
     parts = []
     unsplit = assigned.where(~F.col("cell").isin(hot)).drop("cell")
     parts.append(
-        PQ._ivfpq_codes(unsplit, cents, books, "vec_id", "embedding", True)
+        PQ._ivfpq_codes(unsplit, cents, books, "vec_id", "embedding")
     )
     for r in hot:
         a_idx, b_idx = splits[r]
         rvecs = assigned.where(F.col("cell") == r).drop("cell")
         enc = PQ._ivfpq_codes(
-            rvecs, [new_cents[a_idx], new_cents[b_idx]], books,
-            "vec_id", "embedding", True,
+            rvecs, [new_cents[a_idx], new_cents[b_idx]], books, "vec_id", "embedding"
         )
         parts.append(
             enc.withColumn(
@@ -1636,7 +1627,7 @@ def dedup_semantic_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         F.col("doc_id").alias("vec_id"), F.col("n_chars").alias("quality")
     )
-    pairs = embedding_dup_pairs_fast(emb, threshold=0.4)
+    pairs = embedding_dup_pairs(emb, threshold=0.4)
     cc = connected_components(pairs).withColumnRenamed("doc_id", "id")
     members = (
         emb.select("vec_id")

@@ -185,12 +185,12 @@ def run_sf(spark, sf_dir: str, reps: int, only: set[str] | None = None) -> dict[
         # (the approximate IVF-PQ rows cover the vector path there).
         from pyspark.sql import functions as _F
 
-        from arrow_parquet_logs_spark.operators.dedup import embedding_dup_pairs_fast
+        from arrow_parquet_logs_spark.operators.dedup import embedding_dup_pairs
         from arrow_parquet_logs_spark.sources.tables import load_table
 
         emb = load_table(spark, sf_dir, "embeddings")
         timings["embedding_cosine_tight"] = _time(
-            lambda: _noop(embedding_dup_pairs_fast(emb, threshold=0.9)), reps
+            lambda: _noop(embedding_dup_pairs(emb, threshold=0.9)), reps
         )
         _settle()
     if not only or "logstore_cycle" in only:

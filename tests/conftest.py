@@ -73,7 +73,6 @@ _SCALE_TIER = {
     "test_queries_oracle.py::test_oracle_parity[ann_ivfpq_maxsim_rerank]",
     "test_queries_oracle.py::test_oracle_parity[dedup_lsh_cdc_merge]",
     "test_queries_oracle.py::test_oracle_parity[ann_ivfpq_stream_ingest]",
-    "test_queries_oracle.py::test_oracle_parity[dedup_embedding_cosine]",
     "test_queries_oracle.py::test_oracle_parity[events_stream_stream_join]",
     "test_queries_oracle.py::test_oracle_parity[events_stream_sequential_decision]",
     "test_queries_oracle.py::test_oracle_parity[ann_maxsim_late_interaction]",

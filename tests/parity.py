@@ -67,7 +67,6 @@ _BROADCAST_NL_OK = {
     "tpch_fk_integrity_audit",          # 1-row count x 1-row orphan combines
     "graph_pagerank_trade",             # 1-row N / dangling-mass scalar combine
     "graph_pagerank_personalized",      # same + 1-row seed-count combine
-    "ann_cosine_topk",                  # broadcast query set × corpus
     "ann_binary_quantized_rerank",      # broadcast query set × corpus (integer
                                         # hamming scan) + broadcast rerank
     "embeddings_matryoshka_recall",     # broadcast query set × corpus (two rankings)
@@ -80,7 +79,6 @@ _BROADCAST_NL_OK = {
     "ann_ivfpq_search",                 # broadcast rerank query set
     "ann_ivfpq_maxsim_rerank",          # broadcast query set (gate's exact MaxSim reference)
     "ann_pq_rerank",                    # broadcast rerank query set
-    "knn_label_vote",                   # broadcast query set × corpus
     "events_kmv_type_overlap",          # sketch × sketch pair grid (≤ |types|²
                                         # rows of k-hash arrays — stat-sized,
                                         # never corpus-sized)

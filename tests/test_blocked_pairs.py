@@ -15,7 +15,7 @@ import pytest
 
 from arrow_parquet_logs_spark.operators.dedup import (
     _all_pairs_blocked,
-    embedding_dup_pairs_fast,
+    embedding_dup_pairs,
 )
 
 
@@ -36,7 +36,7 @@ def _canon(df):
 
 def test_single_block_floor_equals_blocked(emb):
     # default block_rows=4096 → n=502 takes the single-group floor path
-    single = _canon(embedding_dup_pairs_fast(emb, threshold=0.4))
+    single = _canon(embedding_dup_pairs(emb, threshold=0.4))
     # force the multi-block regime: block_rows=64 → 8 blocks, 36 pair groups
     multi = _canon(_all_pairs_blocked(emb, "vec_id", "embedding", 0.4, 502, block_rows=64))
     assert len(single) > 0, "degenerate fixture: no pairs at threshold"

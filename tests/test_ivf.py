@@ -138,26 +138,42 @@ def test_append_to_cells_incremental_index(spark, sf_dir, tmp_path):
     assert [tuple(r) for r in got.collect()] == [tuple(r) for r in want.collect()]
 
 
-def test_assign_cells_pandas_matches_expression(spark, sf_dir):
-    """The vectorized (BLAS) assignment must agree with the expression form
-    on the shipped corpus — same nearest centroid for every vector (both
-    use first-minimum tie-break; a disagreement would mean a genuine
-    distance-computation bug, not a tie). Null vectors get a null cell in
-    both forms."""
+def test_assign_cells_matches_duckdb_argmin(spark, sf_dir):
+    """The BLAS assignment must pick the same nearest centroid as an
+    independent DuckDB replay (squared L2 summed per component, lowest
+    index on ties) for every vector of the shipped corpus — a disagreement
+    would mean a distance-computation bug, not a tie. Null vectors get a
+    null cell, other columns untouched."""
+    from tests.parity import duck_connect
+
     emb = load_table(spark, sf_dir, "embeddings")
     cents = ivf.fit_kmeans(emb, k=8, iters=3)
-    expr = {
+    got = {
         r.vec_id: r.cell
         for r in ivf.assign_cells(emb, cents).select("vec_id", "cell").collect()
     }
-    fast = {
-        r.vec_id: r.cell
-        for r in ivf.assign_cells_pandas(emb, cents).select("vec_id", "cell").collect()
-    }
-    assert expr == fast
+    rows = ", ".join(
+        f"({i}, [{', '.join(repr(float(x)) for x in c)}]::DOUBLE[])"
+        for i, c in enumerate(cents)
+    )
+    con = duck_connect(sf_dir)
+    want = dict(
+        con.sql(f"""
+        WITH c(cell, cv) AS (VALUES {rows}),
+        d AS (
+            SELECT e.vec_id, c.cell,
+                   list_sum(list_transform(range(1, len(cv) + 1),
+                       j -> (CAST(e.embedding[j] AS DOUBLE) - cv[j]) ** 2)) AS d2
+            FROM embeddings e, c WHERE e.embedding IS NOT NULL
+        )
+        SELECT vec_id, cell FROM d
+        QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY d2, cell) = 1
+        """).fetchall()
+    )
+    assert want and {k: v for k, v in got.items() if v is not None} == want
     # null vector → null cell, other columns untouched
     null_row = spark.createDataFrame(
         [(9999, None, 0)], "vec_id long, embedding array<double>, label int"
     )
-    out = ivf.assign_cells_pandas(null_row, cents).collect()[0]
+    out = ivf.assign_cells(null_row, cents).collect()[0]
     assert out.cell is None and out.vec_id == 9999 and out.label == 0

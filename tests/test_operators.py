@@ -32,39 +32,56 @@ def test_minhash_lsh_catches_known_nearduos(spark, sf_dir):
 
 
 def test_minhash_pandas_matches_catalyst(spark, sf_dir):
-    """The mapInPandas signature stage must reproduce the Catalyst pipeline
-    bit-for-bit — shingles AND signatures — on the real corpus plus the
-    tokenization edge cases (trailing whitespace kept as empty token by
-    split's limit=-1, ASCII-only \\s, empty doc → [''] token)."""
+    """The mapInPandas signature stage must reproduce the Catalyst recipe
+    the SQL oracles replay bit-for-bit — shingles (``text.distinct_shingles``),
+    signatures (``hash64`` + affine min) AND the stored LSH band keys — on
+    the real corpus plus the tokenization edge cases (trailing whitespace
+    kept as empty token by split's limit=-1, ASCII-only \\s, empty doc →
+    [''] token, NULL text)."""
     from arrow_parquet_logs_spark.functions.hashing import MINHASH_P, minhash_coeffs
     from arrow_parquet_logs_spark.functions.hashing import hash64
-    from arrow_parquet_logs_spark.operators.dedup import _minhash_sets_pandas, _shingle_sets
+    from arrow_parquet_logs_spark.operators.dedup import _band_keys_from_sigs, _minhash_sets
 
     edge = spark.createDataFrame(
         [(9001, "foo\t"), (9002, "\tfoo bar baz"), (9003, ""), (9004, "  "),
-         (9005, "a\xa0b c d e"), (9006, "x\n\ny z w")],
+         (9005, "a\xa0b c d e"), (9006, "x\n\ny z w"), (9007, None)],
         "doc_id long, text string",
     )
     docs = (
         load_table(spark, sf_dir, "documents").select("doc_id", "text").limit(200).unionByName(edge)
     )
-    k = 32
+    k, bands = 32, 8
     ca, cb = minhash_coeffs(k)
-    sets = _shingle_sets(docs, "doc_id", "text", 3)
+    sets = docs.select(F.col("doc_id").alias("sid"), X.distinct_shingles("text", 3).alias("sh"))
     hashes = sets.select("sid", F.explode("sh").alias("g")).select(
         "sid", (hash64(F.col("g")) % MINHASH_P).alias("h")
     )
-    cat = {
-        r["sid"]: list(r[1:])
-        for r in hashes.groupBy("sid")
-        .agg(*[F.min((F.lit(ca[i]) * F.col("h") + F.lit(cb[i])) % MINHASH_P).alias(f"s{i}")
-               for i in range(k)])
-        .collect()
-    }
+    sig_cols = hashes.groupBy("sid").agg(
+        *[F.min((F.lit(ca[i]) * F.col("h") + F.lit(cb[i])) % MINHASH_P).alias(f"s{i}")
+          for i in range(k)]
+    )
+    cat = {r["sid"]: list(r[1:]) for r in sig_cols.collect()}
     cat_sh = {r["sid"]: sorted(r["sh"]) for r in sets.collect()}
-    pd_rows = _minhash_sets_pandas(docs, "doc_id", "text", 3, k).collect()
+    rows = k // bands
+    cat_keys = sorted(
+        tuple(r)
+        for r in sig_cols.select(
+            "sid",
+            F.explode(F.array(*[
+                F.md5(F.concat(
+                    F.lit(f"{b}:"),
+                    F.concat_ws(",", *[F.col(f"s{b * rows + j}").cast("string")
+                                       for j in range(rows)]),
+                ))
+                for b in range(bands)
+            ])).alias("band_key"),
+        ).collect()
+    )
+    pd_sets = _minhash_sets(docs, "doc_id", "text", 3, k)
+    pd_rows = pd_sets.collect()
     assert {r["sid"]: r["sig"] for r in pd_rows} == cat
     assert {r["sid"]: sorted(r["sh"]) for r in pd_rows} == cat_sh
+    assert sorted(map(tuple, _band_keys_from_sigs(pd_sets, k, bands).collect())) == cat_keys
 
 
 def test_simhash_banding_equals_bruteforce(spark, sf_dir):
@@ -230,14 +247,14 @@ def test_new_pandas_operators_empty_inputs(spark):
     Catalyst never probes them that way, composed pipelines do (recurring
     bug class)."""
     from arrow_parquet_logs_spark.operators.dedup import (
-        minhash_lsh_pairs_pandas,
+        minhash_lsh_pairs,
         ngram_jaccard_pairs,
     )
     from arrow_parquet_logs_spark.operators.similarity import srp_lsh_topk
 
     empty_docs = spark.createDataFrame([], "doc_id long, text string")
-    assert minhash_lsh_pairs_pandas(empty_docs).count() == 0
-    assert ngram_jaccard_pairs(empty_docs, pandas_shingles=True).count() == 0
+    assert minhash_lsh_pairs(empty_docs).count() == 0
+    assert ngram_jaccard_pairs(empty_docs).count() == 0
     empty_emb = spark.createDataFrame([], "vec_id long, embedding array<float>")
     assert srp_lsh_topk(empty_emb, empty_emb).count() == 0
     one = spark.createDataFrame([(1, [0.1] * 8)], "vec_id long, embedding array<float>")
@@ -357,7 +374,7 @@ def test_lsh_band_flood_collapses_exact_dups(spark):
 
     from arrow_parquet_logs_spark.operators.dedup import (
         connected_components,
-        minhash_lsh_pairs_pandas,
+        minhash_lsh_pairs,
     )
 
     flood = [(i, "click here to win a prize now") for i in range(10_000)]
@@ -366,7 +383,7 @@ def test_lsh_band_flood_collapses_exact_dups(spark):
     df = spark.createDataFrame(flood, "doc_id long, text string")
 
     t0 = time.time()
-    pairs = minhash_lsh_pairs_pandas(df, threshold=0.6)
+    pairs = minhash_lsh_pairs(df, threshold=0.6)
     rows = pairs.collect()
     elapsed = time.time() - t0
     # star edges: canonical 0 -> each of 9,999 members at jaccard exactly 1.0
@@ -390,13 +407,13 @@ def test_round2_operators_empty_and_degenerate_inputs(spark):
 
     from arrow_parquet_logs_spark.operators.dedup import (
         embedding_dup_pairs,
-        minhash_lsh_pairs_pandas,
+        minhash_lsh_pairs,
         ngram_jaccard_pairs,
     )
     from arrow_parquet_logs_spark.operators.multimodal import attach_media, frame_sample_plan
 
     empty_docs = spark.createDataFrame([], "doc_id long, text string")
-    assert minhash_lsh_pairs_pandas(empty_docs).count() == 0
+    assert minhash_lsh_pairs(empty_docs).count() == 0
     assert ngram_jaccard_pairs(empty_docs, max_shingle_df=10).count() == 0
 
     few = spark.createDataFrame(
@@ -1281,8 +1298,7 @@ def test_jaccard_prefix_equals_full_index(spark, sf_dir):
     # the index really is smaller: sum of prefix lengths < sum of set sizes
     from pyspark.sql import functions as F
 
-    sets = D._shingle_sets(docs, "doc_id", "text", 3)
-    sizes = sets.select(F.size("sh").alias("s"))
+    sizes = docs.select(F.size(X.distinct_shingles("text", 3)).alias("s"))
     total = sizes.agg(F.sum("s")).head()[0]
     prefix_total = sizes.agg(
         F.sum(F.greatest(F.lit(1), F.col("s") - F.ceil(F.col("s") * 0.6).cast("int") + 1))
@@ -1440,20 +1456,8 @@ def test_minhash_incremental_equals_full_recompute(spark, tmp_path):
     }
     assert got == full and len(got) > 0
 
-    # the pandas signature stage must be a drop-in: identical incremental
-    # pairs from the same stored (expression-built) index
-    got_pd = {
-        (r.a_id, r.b_id): round(r.jaccard, 9)
-        for r in minhash_pairs_incremental(
-            spark, idx, batch, corpus, pandas_sigs=True
-        ).collect()
-    }
-    assert got_pd == got
-
-    # append ≡ rebuild: same (sid, band_key) multiset — with the APPEND
-    # through the pandas form onto the expression-built index (mixing the
-    # two forms across an index's life is the documented contract)
-    append_to_minhash_index(batch, idx, pandas_sigs=True)
+    # append ≡ rebuild: same (sid, band_key) multiset
+    append_to_minhash_index(batch, idx)
     rebuilt = str(tmp_path / "idx2")
     materialize_minhash_index(docs, rebuilt)
     a = sorted(map(tuple, spark.read.parquet(idx).collect()))

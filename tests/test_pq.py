@@ -149,58 +149,40 @@ def test_ivfpq_append_equals_rebuild(spark, sf_dir, tmp_path):
     assert a == b
 
 
-def test_encode_pq_pandas_bit_equal_to_expression(spark, sf_dir):
-    from arrow_parquet_logs_spark.operators.ivf import assign_cells_pandas
-
+def test_ivfpq_codes_match_numpy_reference(spark, sf_dir):
+    """The fused assign+encode pass (what materialize/append/stream run)
+    against an independent reference: nearest centroid by directly summed
+    squared distance, then the residual floor(x·SCALE) − floor(c·SCALE)
+    coded per subspace by first-minimum argmin."""
     emb = load_table(spark, sf_dir, "embeddings")
-    cbs = PQ.rademacher_codebooks()
-    a = sorted(map(tuple, PQ.encode_pq(emb, cbs).collect()))
-    b = sorted(map(tuple, PQ.encode_pq_pandas(emb, cbs).collect()))
-    assert a == b
-    # residual (IVF-PQ) form, against the expression encode_ivfpq
     cents, books = PQ.fit_ivfpq(emb)
-    expr = sorted(
+    got = sorted(
         (r.vec_id, r.cell, r.j, r.code)
-        for r in PQ.encode_ivfpq(emb, cents, books).collect()
+        for r in PQ._ivfpq_codes(emb, cents, books, "vec_id", "embedding").collect()
     )
-    assigned = assign_cells_pandas(emb.select("vec_id", "embedding"), cents)
-    fast = sorted(
-        (r.vec_id, r.cell, r.j, r.code)
-        for r in PQ.encode_pq_pandas(assigned, books, centroids=cents).collect()
-    )
-    assert expr == fast
-    # the FUSED assign+encode pass (what materialize/append/stream actually
-    # run): same codes as the expression form
-    fused = sorted(
-        (r.vec_id, r.cell, r.j, r.code)
-        for r in PQ._ivfpq_codes(emb, cents, books, "vec_id", "embedding", True).collect()
-    )
-    assert expr == fused
-
-
-def test_pq_adc_topk_pandas_encode_bit_equal(spark, sf_dir):
-    """The ``pandas_encode=True`` form of the end-to-end ADC top-k (the
-    bench/production encode) must return the identical ranked rows as the
-    expression-encode default — same oracle hash by construction."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    q = emb.where(F.col("vec_id") < 10)
-    cbs = PQ.rademacher_codebooks()
-    a = sorted(map(tuple, PQ.pq_adc_topk(emb, q, cbs, k=5).collect()))
-    b = sorted(map(tuple, PQ.pq_adc_topk(emb, q, cbs, k=5, pandas_encode=True).collect()))
-    assert a == b
+    C = np.asarray(cents, dtype=np.float64)
+    Ci = np.floor(C * PQ.SCALE).astype(np.int64)
+    sub = len(books[0][0])
+    want = []
+    for r in emb.where(F.col("embedding").isNotNull()).collect():
+        x = np.asarray(r.embedding, dtype=np.float64)
+        cell = int(np.argmin(((x[None, :] - C) ** 2).sum(axis=1)))
+        res = np.floor(x * PQ.SCALE).astype(np.int64) - Ci[cell]
+        for j, book in enumerate(books):
+            d = ((res[j * sub : (j + 1) * sub][None, :] - np.asarray(book)) ** 2).sum(axis=1)
+            want.append((r.vec_id, cell, j, int(np.argmin(d))))
+    assert got == sorted(want) and got
 
 
 def test_pq_empty_and_null_vectors(spark):
     cbs = PQ.rademacher_codebooks()
     empty = spark.createDataFrame([], "vec_id long, embedding array<float>")
     assert PQ.encode_pq(empty, cbs).count() == 0
-    assert PQ.encode_pq_pandas(empty, cbs).count() == 0
     # null vectors carry no components -> no codes, never a crash
     withnull = spark.createDataFrame(
         [(1, [0.5] * 64), (2, None)], "vec_id long, embedding array<float>"
     )
     assert {r.vec_id for r in PQ.encode_pq(withnull, cbs).collect()} == {1}
-    assert {r.vec_id for r in PQ.encode_pq_pandas(withnull, cbs).collect()} == {1}
 
 
 def test_stream_ivfpq_ingest_equals_batch_rebuild(spark, sf_dir, tmp_path):

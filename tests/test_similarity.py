@@ -19,14 +19,14 @@ def test_filtered_topk_selective_exact_vs_manual(spark):
     from pyspark.sql import functions as F
 
     from arrow_parquet_logs_spark.operators.similarity import (
-        brute_force_topk_pandas, filtered_topk,
+        brute_force_topk, filtered_topk,
     )
 
     emb = _toy_emb(spark)
     q = emb.where(F.col("vec_id") < 3)
     pred = F.col("label") == 2
     got = filtered_topk(emb, q, pred, k=4).collect()
-    want = brute_force_topk_pandas(emb.where(pred), q, k=4).collect()
+    want = brute_force_topk(emb.where(pred), q, k=4).collect()
     assert [tuple(r) for r in got] == [tuple(r) for r in want]
     assert all(r.vec_id % 4 == 2 for r in got)  # every hit satisfies the filter
 
@@ -41,7 +41,7 @@ def test_filtered_topk_ivf_regime_postfilters_and_recall(spark):
 
     from arrow_parquet_logs_spark.operators import ivf
     from arrow_parquet_logs_spark.operators.similarity import (
-        brute_force_topk_pandas, filtered_topk,
+        brute_force_topk, filtered_topk,
     )
 
     emb = _toy_emb(spark)
@@ -55,7 +55,7 @@ def test_filtered_topk_ivf_regime_postfilters_and_recall(spark):
     for r in got:
         per_q.setdefault(r.q_id, set()).add(r.vec_id)
     assert all(len(v) <= 3 for v in per_q.values())
-    exact = brute_force_topk_pandas(emb.where(pred), q, k=3).collect()
+    exact = brute_force_topk(emb.where(pred), q, k=3).collect()
     want = {}
     for r in exact:
         want.setdefault(r.q_id, set()).add(r.vec_id)
@@ -64,6 +64,28 @@ def test_filtered_topk_ivf_regime_postfilters_and_recall(spark):
     assert hits / total >= 0.5, (hits, total)
     with _pytest.raises(ValueError, match="centroids"):
         filtered_topk(emb, q, pred, k=3, brute_cap=0)
+
+
+def test_brute_force_topk_skips_null_vectors(spark):
+    """A NULL embedding carries no direction: a NULL candidate never ranks
+    and a NULL query row yields no result rows. The answer equals the run
+    over the NULL-free frames, which must not be empty."""
+    from pyspark.sql import functions as F
+
+    from arrow_parquet_logs_spark.operators.similarity import brute_force_topk
+
+    base = _toy_emb(spark, n=40)
+    nulls = spark.createDataFrame(
+        [(1000, None, 0)], "vec_id long, embedding array<float>, label int"
+    )
+    emb = base.unionByName(nulls)
+    q = emb.where((F.col("vec_id") < 3) | (F.col("vec_id") == 1000))
+    got = sorted(map(tuple, brute_force_topk(emb, q, k=4).collect()))
+    want = sorted(
+        map(tuple, brute_force_topk(base, base.where(F.col("vec_id") < 3), k=4).collect())
+    )
+    assert got == want and len(got) == 12
+    assert all(1000 not in (r[0], r[1]) for r in got)
 
 
 # ---- binary-quantized shortlist + exact rerank (r9) -------------------------

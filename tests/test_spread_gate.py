@@ -3,10 +3,11 @@
 ADVICE r6: Spark packs small files into scan partitions (maxPartitionBytes /
 openCostInBytes), so a corpus of many tiny files passes a raw file-count
 gate, skips the repartition, and the Python shingler grinds at low
-parallelism — the exact defect spread() was added to fix. These tests write
-a many-tiny-files corpus whose padded bin-pack estimate collapses to a few
-splits and assert both gates still repartition it, and that a frame already
-carrying enough splits is left alone (no pure-loss text shuffle).
+parallelism — the exact defect the spread gate was added to fix. These
+tests write a many-tiny-files corpus whose padded bin-pack estimate
+collapses to a few splits and assert ``spread_for_python`` still
+repartitions it, and that a frame already carrying enough splits is left
+alone (no pure-loss text shuffle).
 """
 
 from __future__ import annotations
@@ -19,7 +20,6 @@ from arrow_parquet_logs_spark.operators._parallel import (
     estimated_scan_splits,
     spread_for_python,
 )
-from arrow_parquet_logs_spark.operators.dedup import spread
 
 
 @pytest.fixture(scope="module")
@@ -45,17 +45,23 @@ def test_estimated_splits_sees_through_bin_packing(tiny_files):
 
 
 def test_spread_repartitions_bin_packed_tiny_files(spark, tiny_files):
-    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    plan = spread(tiny_files, "doc_id")._jdf.queryExecution().toString()
-    assert "Exchange" in plan or "RoundRobin" in plan or "hashpartitioning" in plan, (
-        "spread() must repartition a bin-packed tiny-file corpus"
+    # the former dedup.spread case, now run through the one remaining gate
+    spread = spread_for_python(tiny_files.select("doc_id", "text"))
+    plan = spread._jdf.queryExecution().toString()
+    assert "RoundRobinPartitioning" in plan, (
+        "spread_for_python must repartition a bin-packed tiny-file corpus"
     )
-    assert spread(tiny_files, "doc_id").rdd.getNumPartitions() == n
+    assert spread.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
 
 
 def test_spread_for_python_repartitions_bin_packed_tiny_files(spark, tiny_files):
     target = spark.sparkContext.defaultParallelism
-    assert spread_for_python(tiny_files).rdd.getNumPartitions() >= min(target, 8)
+    spread = spread_for_python(tiny_files)
+    plan = spread._jdf.queryExecution().toString()
+    assert "RoundRobinPartitioning" in plan, (
+        "spread_for_python must repartition a bin-packed tiny-file corpus"
+    )
+    assert spread.rdd.getNumPartitions() == target
 
 
 def test_estimated_splits_unquotes_percent_encoded_paths(spark, tmp_path):
@@ -86,9 +92,8 @@ def test_spread_noop_on_wide_scan(spark, tiny_files):
     try:
         df = spark.read.parquet(tiny_files.inputFiles()[0].rsplit("/", 1)[0])
         est = estimated_scan_splits(df)
-        n = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        assert est >= n
-        assert spread(df, "doc_id") is df, "wide scan must not re-shuffle"
+        assert est >= spark.sparkContext.defaultParallelism
+        assert spread_for_python(df) is df, "wide scan must not re-shuffle"
     finally:
         spark.conf.set("spark.sql.files.maxPartitionBytes", prev_m)
         spark.conf.set("spark.sql.files.openCostInBytes", prev_o)

@@ -175,14 +175,17 @@ def _assert_window_above_pruner(df, pair_node: str) -> None:
 
 
 def test_brute_force_topk_plan_is_pruned(spark, sf_dir):
+    """The BLAS scorer prunes to top-(k+1) per partition inside its
+    MapInPandas stage, so the window ranks a shortlist and no query×corpus
+    pair join exists at all."""
     from arrow_parquet_logs_spark.operators.similarity import brute_force_topk
     from arrow_parquet_logs_spark.sources.tables import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
     q = emb.where(F.col("vec_id") < 3)
-    _assert_window_above_pruner(
-        brute_force_topk(emb, q, k=5), "BroadcastNestedLoopJoin"
-    )
+    df = brute_force_topk(emb, q, k=5)
+    _assert_window_above_pruner(df, "BroadcastNestedLoopJoin")
+    assert "NestedLoop" not in explain_str(df, mode="simple")
 
 
 def test_maxsim_stage1_plan_is_pruned(spark, sf_dir):
