@@ -35,6 +35,7 @@ Iceberg) formalize; we use it file-per-session here to stay dependency-free.
 
 from __future__ import annotations
 
+import inspect
 import json
 import os
 import re
@@ -51,6 +52,8 @@ from arrow_parquet_logs_spark.schema import LOG_SCHEMA
 from arrow_parquet_logs_spark.session import ensure_runtime_confs
 
 _REQUIRED = ("timestamp", "level", "message")
+#: read_df's ORDER BY and read_logs' driver-side sort (both ascending)
+_READ_ORDER = ("timestamp", "container", "session")
 
 
 class LogValidationError(ValueError):
@@ -388,31 +391,11 @@ class LogStore:
         so a leaf-file read with an explicit schema returns NULLs for them;
         :meth:`_read_session_files` re-fills the constants per session group.
         """
-        for kind, name in (("container", container), ("session", session)):
-            if name is not None:  # only None means "all"; '' etc. are invalid
-                self._check_name(kind, name)
-        groups: list[tuple[str, str]] = []
-        both = container is not None and session is not None
-        for c, s in [(container, session)] if both else self._sessions():
-            if container is not None and c != container:
-                continue
-            if session is not None and s != session:
-                continue
-            groups.append((c, s))
-        # dt-subpartition pruning: resolve the inclusive timestamp bounds to
-        # calendar dates once, so compacted archives shed whole files before
-        # any footer is opened (inclusive bounds → inclusive dates)
-        lo_d = _parse_ts(start_ts, 0).date().isoformat() if start_ts is not None else None
-        hi_d = _parse_ts(end_ts, 0).date().isoformat() if end_ts is not None else None
-        dfs = []
-        for c, s in groups:
-            a, l = self._tier_files(c, s, start_date=lo_d, end_date=hi_d)
-            if a or l:
-                dfs.append(self._read_session_files(c, s, a + l))
-        if not dfs:
-            df = self.spark.createDataFrame([], LOG_SCHEMA)
-        else:
-            df = reduce(lambda x, y: x.unionByName(y), dfs)
+        dfs = [
+            self._read_session_files(c, s, files)
+            for c, s, files in self._scan_files(container, session, start_ts, end_ts)
+        ]
+        df = reduce(lambda x, y: x.unionByName(y), dfs) if dfs else self.spark.createDataFrame([], LOG_SCHEMA)
         pred = compile_filters(filters)
         if start_ts is not None:
             pred = pred & (F.col("timestamp") >= F.lit(start_ts).cast("timestamp"))
@@ -420,8 +403,28 @@ class LogStore:
             pred = pred & (F.col("timestamp") <= F.lit(end_ts).cast("timestamp"))
         df = df.where(pred)
         if ordered:
-            df = df.orderBy("timestamp", "container", "session")
+            df = df.orderBy(*_READ_ORDER)
         return df
+
+    def _scan_files(self, container, session, start_ts=None, end_ts=None) -> list[tuple[str, str, list[str]]]:
+        """``(container, session, files)`` for every session group a read
+        scans — the one file resolution :meth:`read_df` and :meth:`count`
+        share (name checks, CURRENT-manifest exclusion, ``dt=`` pruning)."""
+        for kind, name in (("container", container), ("session", session)):
+            if name is not None:  # only None means "all"; '' etc. are invalid
+                self._check_name(kind, name)
+        groups = [(container, session)] if container is not None and session is not None else self._sessions()
+        # dt-subpartition pruning: resolve the inclusive timestamp bounds to
+        # calendar dates once, so compacted archives shed whole files before
+        # any footer is opened (inclusive bounds → inclusive dates)
+        lo_d = _parse_ts(start_ts, 0).date().isoformat() if start_ts is not None else None
+        hi_d = _parse_ts(end_ts, 0).date().isoformat() if end_ts is not None else None
+        tiers = [
+            (c, s, self._tier_files(c, s, start_date=lo_d, end_date=hi_d))
+            for c, s in groups
+            if container in (None, c) and session in (None, s)
+        ]
+        return [(c, s, a + l) for c, s, (a, l) in tiers if a or l]
 
     def _read_session_files(self, container: str, session: str, files: Sequence[str]) -> DataFrame:
         """Read one session's files, restoring the constant container/session
@@ -436,13 +439,15 @@ class LogStore:
         )
 
     def read_logs(self, **kwargs) -> list[dict]:
-        # Arrow-batched fetch (r12): one columnar transfer instead of a
-        # Py4J Row object per log line — the row path was ~0.3 s of the
-        # 20k-row cycle. ``to_pylist`` yields the same dict-per-row shape;
-        # timestamps come back tz-aware (Arrow carries the session zone)
-        # and are normalized to the naive local-time datetimes that
-        # ``Row.asDict`` produced, so callers see identical values.
-        tbl = self.read_df(**kwargs).toArrow()
+        # One Spark job: the unordered rows come back through Arrow and are
+        # sorted on the driver, which holds them all anyway — read_df's
+        # ORDER BY would add a sampling job and a shuffle. NULLS FIRST as in
+        # Spark. Timestamps come back tz-aware and are normalized to the
+        # naive local-time datetimes ``Row.asDict`` produces.
+        ordered = kwargs.pop("ordered", True)
+        tbl = self.read_df(ordered=False, **kwargs).toArrow()
+        if ordered:
+            tbl = tbl.sort_by([(k, "ascending") for k in _READ_ORDER], null_placement="at_start")
         out = tbl.to_pylist()
         for d in out:
             ts = d["timestamp"]
@@ -470,8 +475,16 @@ class LogStore:
         }
 
     def count(self, **kwargs) -> int:
+        """Rows ``read_df(**kwargs)`` returns. Without ``filters`` or time
+        bounds: the Parquet footer row counts of the files a read would scan,
+        no Spark job. A predicate needs a scan, so it runs one."""
         kwargs.setdefault("ordered", False)
-        return self.read_df(**kwargs).count()
+        if kwargs.get("filters") or kwargs.get("start_ts") is not None or kwargs.get("end_ts") is not None:
+            return self.read_df(**kwargs).count()
+        # bind: a misspelled argument raises as it would in read_df
+        args = inspect.signature(LogStore.read_df).bind(self, **kwargs).arguments
+        groups = self._scan_files(args.get("container"), args.get("session"))
+        return sum(n for _, _, files in groups for n, _, _, _ in self._footers(files))
 
     def stream(self, batch_size: int = 1000, **kwargs) -> Iterator[list[dict]]:
         """Bounded-memory driver-side iteration (reference reader.py:148-179)."""
@@ -487,12 +500,10 @@ class LogStore:
     def summary(self, container: str, session: str) -> dict:
         """files/rows/bytes per tier (reference reader.py:560-577) — from
         filesystem + parquet footers, no data scan."""
-        import pyarrow.parquet as pq
-
         out = {}
         for tier, files in zip(("archive", "landing"), self._tier_files(container, session)):
-            rows = sum(pq.ParquetFile(f).metadata.num_rows for f in files)
-            size = sum(os.path.getsize(f) for f in files)
+            feet = self._footers(files)
+            rows, size = sum(f[0] for f in feet), sum(f[1] for f in feet)
             out[tier] = {"files_scanned": len(files), "total_rows": rows, "total_size_bytes": size}
         out["total_rows"] = out["archive"]["total_rows"] + out["landing"]["total_rows"]
         out["files_scanned"] = out["archive"]["files_scanned"] + out["landing"]["files_scanned"]
@@ -610,36 +621,24 @@ class LogStore:
         )
 
     @staticmethod
-    def _ts_bounds(files: Sequence[str]):
-        """(min, max) `timestamp` across the files' parquet footer statistics
-        (no data scan, no Spark job); None when any footer lacks usable
-        stats. Feeds both the retention no-op check and the Z-order scale
-        bounds, so compaction never pays a stats job."""
-        from datetime import timezone as _tz
-
+    def _footers(files: Sequence[str]) -> list[tuple[int, int, datetime | None, datetime | None]]:
+        """Per-file ``(num_rows, size, ts_min, ts_max)`` from Parquet footers
+        and the filesystem — no data scan, no Spark job. The `timestamp`
+        bounds are UTC, or None when some row group lacks statistics."""
         import pyarrow.parquet as pq
 
-        lo = hi = None
-        try:
-            for f in files:
-                md = pq.ParquetFile(f).metadata
-                idx = {md.schema.column(i).name: i for i in range(md.num_columns)}
-                if "timestamp" not in idx:
-                    return None
-                for rg in range(md.num_row_groups):
-                    st = md.row_group(rg).column(idx["timestamp"]).statistics
-                    if st is None or st.min is None or st.max is None:
-                        return None
-                    m, x = st.min, st.max
-                    if m.tzinfo is None:
-                        m = m.replace(tzinfo=_tz.utc)
-                    if x.tzinfo is None:
-                        x = x.replace(tzinfo=_tz.utc)
-                    lo = m if lo is None else min(lo, m)
-                    hi = x if hi is None else max(hi, x)
-        except Exception:
-            return None
-        return lo, hi
+        out = []
+        for f in files:
+            md = pq.read_metadata(f)
+            ts = [None, None]
+            if "timestamp" in md.schema.names:
+                i = md.schema.names.index("timestamp")
+                stats = [md.row_group(g).column(i).statistics for g in range(md.num_row_groups)]
+                if stats and all(st is not None and st.has_min_max for st in stats):
+                    ts = [min(st.min for st in stats), max(st.max for st in stats)]
+                    ts = [t if t.tzinfo else t.replace(tzinfo=timezone.utc) for t in ts]
+            out.append((md.num_rows, os.path.getsize(f), *ts))
+        return out
 
     def _compact_locked(
         self,
@@ -661,9 +660,13 @@ class LogStore:
             return {"version": man["version"], "compacted": False}
         if not inputs:
             return {"version": man["version"], "compacted": False}
-        bounds = self._ts_bounds(inputs)
-        lo = bounds[0] if bounds is not None else None
-        if retain_from is not None and lo is not None and lo >= retain_from:
+        # footer `timestamp` stats of the files holding rows feed both the
+        # retention no-op check and the Z-order scale bounds, so compaction
+        # never pays a stats job; None when some file lacks them
+        feet = [f for f in self._footers(inputs) if f[0]]
+        has_stats = feet and all(f[2] is not None for f in feet)
+        bounds = (min(f[2] for f in feet), max(f[3] for f in feet)) if has_stats else None
+        if retain_from is not None and bounds is not None and bounds[0] >= retain_from:
             # nothing is older than the cutoff — a periodic retention job
             # must not rewrite the whole archive into an identical new
             # version every tick. Footer stats answer this without a scan.

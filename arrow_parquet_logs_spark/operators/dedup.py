@@ -681,7 +681,10 @@ def connected_components(pairs: DataFrame, a_col: str = "a_id", b_col: str = "b_
     is materialized either way, so the count is free):
 
     - **Bounded graph** (≤ ``driver_edge_cap`` directed edges, default 2 M):
-      exact union-find on the driver — near-dup graphs are orders of
+      ``driver_edge_cap`` counts RAW directed edges — each input pair
+      twice (both directions), duplicate pairs included, since no DISTINCT
+      runs first; a caller emitting each pair k times reaches the cap k×
+      sooner. Exact union-find on the driver — near-dup graphs are orders of
       magnitude smaller than their corpus (they hold only the nodes that
       HAVE a near-duplicate). The edge list arrives via Arrow
       (``toPandas``: two columnar arrays, ~16 B/edge for longs) rather

@@ -2133,7 +2133,7 @@ def ann_bq_centered_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     fused floats once by design."""
     from pyspark.sql import Window as W
 
-    from arrow_parquet_logs_spark.functions.vector import cosine_sim
+    from arrow_parquet_logs_spark.functions.vector import as_double_array, dot, l2_norm
     from arrow_parquet_logs_spark.operators._parallel import spread_for_python
 
     emb = load_table(spark, sf_dir, "embeddings").where(
@@ -2165,13 +2165,18 @@ def ann_bq_centered_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             lambda acc, x: acc + x,
         )
 
+    # a zero-norm vector has no direction: its cosine is NULL (not an ANSI
+    # divide-by-zero) and ranks LAST in the exact order, as in the oracle,
+    # whose list_cosine_similarity scores it -1.0
+    cv, qv = as_double_array("c_v"), as_double_array("q_v")
+    cosine = F.try_divide(dot(cv, qv), l2_norm(cv) * l2_norm(qv))
     pairs = (
         c.crossJoin(F.broadcast(q))
         .where(F.col("c_id") != F.col("q_id"))
         .select(
             "q_id",
             F.col("c_id").alias("vec_id"),
-            F.round(cosine_sim("c_v", "q_v"), 6).alias("cosine"),
+            F.round(cosine, 6).alias("cosine"),
             ham("c_rw", "q_rw").alias("ham_raw"),
             ham("c_cw", "q_cw").alias("ham_cen"),
         )
@@ -2186,7 +2191,8 @@ def ann_bq_centered_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bit-equal to the unfused pruner (tests/test_topk.py). The negated
     # cosine gives all three tags one ascending sort key (-x is an exact
     # IEEE sign flip and SQL orders -0.0 = 0.0, so desc(cosine) ==
-    # asc(-cosine) with identical ties).
+    # asc(-cosine) with identical ties). NULLS LAST keeps a NULL cosine at
+    # the bottom, where the pruner (pandas sorts NaN last) also puts it.
     from arrow_parquet_logs_spark.operators.topk import partial_topk_tagged
 
     pruned = partial_topk_tagged(
@@ -2207,7 +2213,9 @@ def ann_bq_centered_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranked = (
         pruned.withColumn(
             "rn",
-            F.row_number().over(W.partitionBy("q_id", "_ord").orderBy(skey, "vec_id")),
+            F.row_number().over(
+                W.partitionBy("q_id", "_ord").orderBy(skey.asc_nulls_last(), "vec_id")
+            ),
         )
         .where(F.col("rn") <= 10)
         .select("q_id", "vec_id", "_ord")

@@ -78,18 +78,36 @@ def ensure_runtime_confs(spark: SparkSession) -> SparkSession:
     return spark
 
 
+#: ``spark.driver.memory`` when ``SPARK_DRIVER_MEMORY`` is unset: this share
+#: of physical RAM, at least the floor, never more than the RAM itself. Local
+#: mode runs its executors inside the driver JVM; the rest of RAM is left to
+#: the Python workers, off-heap Arrow buffers and the page cache.
+_DRIVER_MEMORY_FRACTION = 0.5
+_DRIVER_MEMORY_FLOOR_MB = 1024
+
+
+def default_driver_memory() -> str:
+    """Driver heap sized to this machine, as a JVM size string (``"7680m"``)."""
+    try:
+        phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    except (AttributeError, ValueError, OSError):  # no sysconf: assume the floor fits
+        return f"{_DRIVER_MEMORY_FLOOR_MB}m"
+    return f"{min(phys_mb, max(_DRIVER_MEMORY_FLOOR_MB, int(phys_mb * _DRIVER_MEMORY_FRACTION)))}m"
+
+
 def get_spark(app_name: str = "arrow-parquet-logs-spark", cpus: int | str | None = None) -> SparkSession:
     """Build (or reuse) the local session.
 
     ``cpus`` defaults to ``$SPARK_GRAFT_CPUS`` (driver contract) or ``*``.
-    Local mode is one JVM; ``spark.driver.memory`` is the only memory knob.
+    Local mode is one JVM; ``spark.driver.memory`` is the only memory knob:
+    ``$SPARK_DRIVER_MEMORY``, else :func:`default_driver_memory`.
     """
     cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS") or "*"
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", "32" if cpus == "*" else str(cpus))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory())
         # UI off by default (bench noise); SPARK_GRAFT_UI=true/1/yes flips
         # it on for probes that read shuffle metrics over the UI REST API
         # (normalized here — a raw "1" would crash the JVM boolean parse)

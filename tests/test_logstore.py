@@ -413,3 +413,164 @@ def test_maintain_sweeps_all_sessions(store):
     r4 = store.maintain(retain_before="2024-01-02T00:00:00Z", keep_versions=1)
     assert not r4["errors"]
     assert store.count() == 2  # only the 2024-01-02 rows survive
+
+
+# ---- footer-answered count() and driver-ordered read_logs() ---------------
+
+def _scopes(store):
+    """Every read scope over the store's sessions: each session, each
+    container on its own, and the whole store."""
+    pairs = store._sessions()
+    return (
+        [{"container": c, "session": s} for c, s in pairs]
+        + [{"container": c} for c in sorted({c for c, _ in pairs})]
+        + [{}]
+    )
+
+
+def _assert_footer_count_matches_scan(store, scopes=None):
+    for scope in scopes or _scopes(store):
+        assert store.count(**scope) == store.read_df(ordered=False, **scope).count(), scope
+
+
+def test_footer_count_matches_scan_empty_and_landing_only(store):
+    _assert_footer_count_matches_scan(
+        store, [{}, {"container": "a"}, {"container": "a", "session": "s1"}]
+    )
+    assert store.count() == 0
+    for c, s, n in (("a", "s1", 3), ("a", "s2", 2), ("b", "s1", 1)):
+        for i in range(n):
+            _w(store, c=c, s=s, ts=f"2024-01-01T00:00:0{i}Z", msg=f"{c}{s}{i}")
+    assert store.count() == 6 and store.count(container="a") == 5
+    _assert_footer_count_matches_scan(store)
+
+
+def test_footer_count_matches_scan_archive_ghost_and_replay(store):
+    _w(store, msg="m0")
+    _w(store, msg="m1", ts="2024-01-01T00:00:01Z")
+    _w(store, s="s2", msg="x0")
+    ldir = store._part_dir(store._landing_root(), "a", "s1")
+    saved = {f: open(os.path.join(ldir, f), "rb").read() for f in os.listdir(ldir)
+             if f.endswith(".parquet")}
+    store.compact("a", "s1")                       # v1 consumes m0, m1
+    _w(store, msg="m2", ts="2024-01-01T00:00:02Z")  # archive + landing
+    assert store.count(container="a", session="s1") == 3
+    _assert_footer_count_matches_scan(store)
+    # crash-window ghost: a consumed landing file copied back
+    man = store._current_manifest("a", "s1")
+    adir = store._part_dir(store._archive_root(), "a", "s1")
+    archive_file = os.path.join(adir, f"v{man['version']}", man["files"][0])
+    shutil.copy(archive_file, os.path.join(ldir, man["consumed_landing"][0]))
+    assert store.count(container="a", session="s1") == 3
+    _assert_footer_count_matches_scan(store)
+    # replay: v2 grace-deletes v1's consumed files, which then reappear
+    store.compact("a", "s1")
+    for f, data in saved.items():
+        assert not os.path.exists(os.path.join(ldir, f))
+        with open(os.path.join(ldir, f), "wb") as fh:
+            fh.write(data)
+    assert store.count(container="a", session="s1") == 3
+    assert store.count() == 4
+    _assert_footer_count_matches_scan(store)
+
+
+def test_footer_count_matches_scan_streamed_landing(spark, tmp_path):
+    """The streaming sink strips container/session into the partition path;
+    the footer count still covers exactly the files a read scans."""
+    from arrow_parquet_logs_spark.streaming import start_ingest
+
+    src = tmp_path / "incoming"
+    src.mkdir()
+    with open(src / "b1.json", "w") as fh:
+        for i, (c, s) in enumerate((("a", "s1"), ("a", "s1"), ("a", "s2"))):
+            fh.write(json.dumps({"timestamp": f"2024-01-01T00:0{i}:00Z", "level": "INFO",
+                                 "message": f"m{i}", "container": c, "session": s}) + "\n")
+    root = str(tmp_path / "store")
+    start_ingest(spark, str(src), root, str(tmp_path / "ckpt")).awaitTermination()
+    store = LogStore(spark, root)
+    ldir = store._part_dir(store._landing_root(), "a", "s1")
+    landed = [f for f in os.listdir(ldir) if f.endswith(".parquet")]
+    import pyarrow.parquet as pq
+
+    assert landed and all("container" not in pq.read_schema(os.path.join(ldir, f)).names for f in landed)
+    _w(store, msg="m3", ts="2024-01-01T00:03:00Z")  # a batch file beside the streamed ones
+    assert store.count(container="a", session="s1") == 3 and store.count() == 4
+    _assert_footer_count_matches_scan(store)
+
+
+def test_filtered_count_still_scans(store):
+    for i in range(4):
+        _w(store, ts=f"2024-01-01T00:00:0{i}Z", level="ERROR" if i % 2 else "INFO", msg=f"m{i}")
+    assert store.count(container="a", filters=[("level", "==", "ERROR")]) == 2
+    assert store.count(start_ts="2024-01-01T00:00:01Z", end_ts="2024-01-01T00:00:02Z") == 2
+    with pytest.raises(TypeError):
+        store.count(contianer="a")  # misspelled, as read_df would reject it
+    with pytest.raises(ValueError, match="invalid"):
+        store.count(container="../x")
+
+
+def _import_null_ts_row(store, tmp_path, c, s):
+    import pyarrow as pa
+
+    path = str(tmp_path / "null_ts.arrow")
+    tbl = pa.table({
+        "timestamp": pa.array([None], type=pa.timestamp("us", tz="UTC")),
+        "level": ["WARN"],
+        "message": ["no clock"],
+    })
+    with pa.OSFile(path, "wb") as sink, pa.ipc.new_stream(sink, tbl.schema) as w:
+        w.write_table(tbl)
+    return store.import_arrow_buffers(c, s, [path])
+
+
+def test_read_logs_order_matches_spark_order_by(store, tmp_path):
+    """Driver-side Arrow sort == read_df's ORDER BY timestamp, container,
+    session: ties on timestamp across two sessions of one container order
+    by session, and a NULL timestamp sorts first (Spark ascending = NULLS
+    FIRST)."""
+    for i in (2, 0, 1):
+        for s in ("s2", "s1"):
+            _w(store, s=s, ts=f"2024-01-01T00:00:0{i}Z", msg=f"{s}-{i}")
+    _w(store, c="b", s="s1", ts="2024-01-01T00:00:01Z", msg="b-1")
+    store.compact("a", "s1")  # one session's rows from the archive tier
+    assert _import_null_ts_row(store, tmp_path, "a", "s2") == 1
+    for scope in ({"container": "a"}, {}, {"container": "a", "session": "s2"}):
+        want = [r.asDict() for r in store.read_df(**scope).collect()]
+        assert store.read_logs(**scope) == want, scope
+    got = store.read_logs(container="a")
+    assert got[0]["timestamp"] is None
+    assert [r["message"] for r in got[1:3]] == ["s1-0", "s2-0"]
+    # ordered=False skips the sort but returns the same rows
+    key = lambda r: (r["session"], r["message"])  # noqa: E731
+    assert sorted(store.read_logs(container="a", ordered=False), key=key) == sorted(got, key=key)
+
+
+def _jobs_run(spark, fn):
+    """(fn(), number of Spark jobs it ran), from the job group it runs in."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobpin-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job-count pin")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # job-start events are async
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_unfiltered_count_runs_no_job_and_read_logs_one(spark, store):
+    for s in ("s1", "s2"):
+        for i in range(3):
+            _w(store, s=s, ts=f"2024-01-01T00:00:0{i}Z", msg=f"{s}{i}")
+    store.compact("a", "s1")
+    _w(store, ts="2024-01-01T00:00:09Z", msg="late")
+    for scope in ({}, {"container": "a"}, {"container": "a", "session": "s1"}):
+        n, jobs = _jobs_run(spark, lambda: store.count(**scope))
+        assert (n, jobs) == (7 if scope.get("session") is None else 4, 0), scope
+    rows, jobs = _jobs_run(spark, lambda: store.read_logs(container="a"))
+    assert len(rows) == 7 and jobs == 1
+    # the filtered path still runs Spark (a predicate needs a scan)
+    n, jobs = _jobs_run(spark, lambda: store.count(container="a", filters=[("message", "==", "late")]))
+    assert n == 1 and jobs >= 1

@@ -290,3 +290,38 @@ def test_binary_quantize_words_centered_matches_numpy(spark):
     raw = df.select(binary_quantize_words("embedding", 64).alias("w")).collect()
     assert all(list(r.w) == [(1 << 32) - 1, (1 << 32) - 1] for r in raw)
     assert any(list(w) != [(1 << 32) - 1, (1 << 32) - 1] for w in got.values())
+
+
+def test_bq_audit_zero_vector_ranks_last_in_exact_top10(spark, tmp_path):
+    """A zero-norm vector has a NULL cosine. The BQ recall audit must rank
+    it last in the exact order (the oracle scores it -1.0), not first and
+    not with a divide-by-zero. Five all-positive queries have raw-BQ code
+    all ones; the zero vector's code is all zeros, so it is each query's
+    worst raw-Hamming candidate. With 11 candidates per query, the exact
+    top 10 is then exactly the raw top 10 (overlap 10); a NULL-first exact
+    ranking would swap the zero vector in and score 9."""
+    import random
+
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from arrow_parquet_logs_spark.queries.catalog import all_oracles
+    from arrow_parquet_logs_spark.queries.vectorq import ann_bq_centered_recall_audit
+    from tests.parity import compare
+
+    rng = random.Random(11)
+    vecs = [[abs(rng.gauss(0, 1)) + 0.1 for _ in range(64)] for _ in range(5)]
+    vecs += [[rng.gauss(0, 1) for _ in range(64)] for _ in range(6)]
+    vecs.insert(7, [0.0] * 64)
+    path = str(tmp_path / "embeddings.parquet")
+    pq.write_table(pa.table({
+        "vec_id": pa.array(range(len(vecs)), pa.int64()),
+        "embedding": pa.array(vecs, pa.list_(pa.float32())),
+        "label": pa.array([0] * len(vecs), pa.int32()),
+    }), path)
+    df = ann_bq_centered_recall_audit(spark, str(tmp_path))
+    assert [r.overlap10_raw for r in df.collect()] == [10] * 5
+    con = duckdb.connect()
+    con.sql(f"CREATE VIEW embeddings AS SELECT * FROM '{path}'")
+    compare(df, con, all_oracles()["ann_bq_centered_recall_audit"], "ann_bq_centered_recall_audit")
