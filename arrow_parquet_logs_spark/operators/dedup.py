@@ -1114,9 +1114,9 @@ def embedding_dup_pairs(
         # it), even the count job is skipped; the count stays for real
         # block sizing, where an upper bound from a filtered frame could
         # over-partition the blocks.
-        from arrow_parquet_logs_spark.operators._parallel import scan_rows_upper_bound
+        from arrow_parquet_logs_spark.operators._parallel import scan_facts
 
-        bound = scan_rows_upper_bound(emb)
+        bound = scan_facts(emb).rows
         n_emb = bound if bound is not None and bound <= 2 * 4096 else emb.count()
         return _all_pairs_blocked(emb, id_col, vec_col, threshold, n_emb)
     # ONE planning job: the fit sample doubles as the √N sizing probe; a

@@ -17,7 +17,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from arrow_parquet_logs_spark.operators._parallel import (
-    estimated_scan_splits,
+    provably_small_scan,
+    scan_facts,
     spread_for_python,
 )
 
@@ -40,7 +41,7 @@ def tiny_files(spark, tmp_path_factory):
 
 
 def test_estimated_splits_sees_through_bin_packing(tiny_files):
-    est = estimated_scan_splits(tiny_files)
+    est = scan_facts(tiny_files).splits
     assert est < 8, f"64 tiny files must estimate to a few packed splits, got {est}"
 
 
@@ -78,7 +79,7 @@ def test_estimated_splits_unquotes_percent_encoded_paths(spark, tmp_path):
     )
     df = spark.read.parquet(out)
     assert any("%20" in f or " " in f for f in df.inputFiles())
-    est = estimated_scan_splits(df)
+    est = scan_facts(df).splits
     assert est < 8, f"16 tiny files in an encoded path must bin-pack, got {est}"
 
 
@@ -91,7 +92,7 @@ def test_spread_noop_on_wide_scan(spark, tiny_files):
     spark.conf.set("spark.sql.files.openCostInBytes", "16384")
     try:
         df = spark.read.parquet(tiny_files.inputFiles()[0].rsplit("/", 1)[0])
-        est = estimated_scan_splits(df)
+        est = scan_facts(df).splits
         assert est >= spark.sparkContext.defaultParallelism
         assert spread_for_python(df) is df, "wide scan must not re-shuffle"
     finally:
@@ -120,7 +121,7 @@ def test_row_group_cap_extrapolates_past_512_files(spark, tmp_path):
     spark.conf.set("spark.sql.files.maxPartitionBytes", "2048")
     spark.conf.set("spark.sql.files.openCostInBytes", "0")
     try:
-        est = estimated_scan_splits(df)
+        est = scan_facts(df).splits
         # byte arithmetic alone says total/2KB (thousands); the sampled
         # footer cap must bring the estimate to the true task bound
         assert est == 600, f"expected the 600-row-group cap, got {est}"
@@ -152,7 +153,7 @@ def test_row_group_cap_robust_to_compacted_outlier(spark, tmp_path):
     spark.conf.set("spark.sql.files.maxPartitionBytes", "2048")
     spark.conf.set("spark.sql.files.openCostInBytes", "0")
     try:
-        est = estimated_scan_splits(df)
+        est = scan_facts(df).splits
         assert est == 600, f"outlier must not disable the cap, got {est}"
     finally:
         spark.conf.set("spark.sql.files.maxPartitionBytes", prev_m)
@@ -161,10 +162,11 @@ def test_row_group_cap_robust_to_compacted_outlier(spark, tmp_path):
 
 def test_footer_reads_are_memoized(spark, tiny_files, monkeypatch):
     """ADVICE r8: repeated gates on the same corpus must pay the footer
-    reads once per (path, mtime, size), not once per call."""
+    reads once per (path, mtime, size), not once per call — the row bound
+    included (it used to re-open every footer on each lookup)."""
     from arrow_parquet_logs_spark.operators import _parallel as P
 
-    P._RG_FOOTER_CACHE.clear()
+    P._read_footer.cache_clear()
     import pyarrow.parquet as pq
 
     opens = []
@@ -175,23 +177,74 @@ def test_footer_reads_are_memoized(spark, tiny_files, monkeypatch):
         return orig(path, *a, **k)
 
     monkeypatch.setattr(pq, "ParquetFile", _spy)
-    estimated_scan_splits(tiny_files)
+    first_facts = scan_facts(tiny_files)
     first = len(opens)
-    estimated_scan_splits(tiny_files)
+    assert first == len(tiny_files.inputFiles()), "one footer open per file"
+    assert scan_facts(tiny_files).splits == first_facts.splits
     assert len(opens) == first, "second estimate must be served from the cache"
+    assert scan_facts(tiny_files).rows == first_facts.rows == 256
+    assert len(opens) == first, "second row-bound lookup must open no footer"
 
 
-def test_provably_small_scan_byte_bound(spark, tmp_path, tiny_files):
+def test_one_file_walk_per_gate_call(spark, tiny_files, monkeypatch):
+    """Each gate answers from ONE inputFiles() walk (provably_small_scan
+    used to list the files twice: once for splits, once for bytes)."""
+    calls = []
+    orig = type(tiny_files).inputFiles
+
+    def _spy(self):
+        calls.append(1)
+        return orig(self)
+
+    monkeypatch.setattr(type(tiny_files), "inputFiles", _spy)
+    spread_for_python(tiny_files)
+    assert len(calls) == 1, f"spread_for_python walked the files {len(calls)}×"
+    calls.clear()
+    provably_small_scan(tiny_files)
+    assert len(calls) == 1, f"provably_small_scan walked the files {len(calls)}×"
+
+
+def test_row_bound_only_for_scan_shaped_plans(spark, tmp_path):
+    """ADVICE r12: footer totals bound a frame's rows only when no plan
+    node can multiply them. An explode ×3 over a small file must get no
+    bound (the footers say 100, the frame holds 300), while the bare and
+    the projected/filtered scans keep their exact footer total."""
+    out = str(tmp_path / "small.parquet")
+    spark.range(100).select(F.col("id").alias("doc_id")).coalesce(1).write.parquet(out)
+    df = spark.read.parquet(out)
+    assert scan_facts(df).rows == 100
+    assert scan_facts(df.filter("doc_id > 10").select("doc_id")).rows == 100
+    exploded = df.select("doc_id", F.explode(F.array(F.lit(1), F.lit(2), F.lit(3))))
+    assert exploded.count() == 300
+    facts = scan_facts(exploded)
+    assert not facts.scan_only and facts.rows is None, facts
+
+
+def test_row_bound_equals_count_on_embeddings(spark, sf_dir):
+    """The dedup floor gate reads the bound from a bare load_table frame;
+    it must stay answered (exactly the count) so that path skips its count
+    job."""
+    from arrow_parquet_logs_spark.sources.tables import load_table
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    facts = scan_facts(emb)
+    assert facts.scan_only and facts.rows == emb.count()
+
+
+def test_provably_small_scan_byte_bound(spark, tmp_path, tiny_files, monkeypatch):
     """ADVICE r8 (skyline): few-split is NOT small when the bytes are big —
     a 1–2 row-group giant file must stay on the distributed plan."""
-    from arrow_parquet_logs_spark.operators._parallel import provably_small_scan
+    from arrow_parquet_logs_spark.operators import _parallel as P
 
     out = str(tmp_path / "one.parquet")
     spark.range(512).select(F.col("id").alias("doc_id")).coalesce(1).write.parquet(out)
     df = spark.read.parquet(out)
     assert provably_small_scan(df), "a genuinely tiny single-file scan is small"
-    assert not provably_small_scan(df, max_bytes=64), (
-        "the byte bound must veto a few-split frame whose bytes exceed it"
-    )
+    with monkeypatch.context() as m:
+        m.setattr(P, "SMALL_SCAN_MAX_BYTES", 64)
+        assert not provably_small_scan(df), (
+            "the byte bound must veto a few-split frame whose bytes exceed it"
+        )
     # many-split frames are never 'provably small'
-    assert not provably_small_scan(tiny_files, max_splits=0)
+    monkeypatch.setattr(P, "SMALL_SCAN_MAX_SPLITS", 0)
+    assert not provably_small_scan(tiny_files)
