@@ -397,10 +397,14 @@ class LogStore:
         ]
         df = reduce(lambda x, y: x.unionByName(y), dfs) if dfs else self.spark.createDataFrame([], LOG_SCHEMA)
         pred = compile_filters(filters)
+        # the bounds as _scan_files' dt= pruning and ingest read them (a naive
+        # value is UTC): handing Spark a naive datetime would convert it in
+        # the process time zone and filter on a different instant than the
+        # pruning did
         if start_ts is not None:
-            pred = pred & (F.col("timestamp") >= F.lit(start_ts).cast("timestamp"))
+            pred = pred & (F.col("timestamp") >= F.lit(_parse_ts(start_ts, 0)))
         if end_ts is not None:
-            pred = pred & (F.col("timestamp") <= F.lit(end_ts).cast("timestamp"))
+            pred = pred & (F.col("timestamp") <= F.lit(_parse_ts(end_ts, 0)))
         df = df.where(pred)
         if ordered:
             df = df.orderBy(*_READ_ORDER)
@@ -601,6 +605,8 @@ class LogStore:
         """
         adir = self._part_dir(self._archive_root(), container, session)
         os.makedirs(adir, exist_ok=True)
+        if retain_from is not None:  # one instant, however it was spelled
+            retain_from = _parse_ts(retain_from, 0)
         with self._session_lock(adir, container, session):
             return self._compact_locked(container, session, target_files, adir, retain_from)
 
@@ -682,7 +688,7 @@ class LogStore:
         if retain_from is not None:
             # inclusive survival bound: rows at exactly the cutoff survive
             # (consistent with the store's inclusive range-read semantics)
-            df = df.where(F.col("timestamp") >= F.lit(retain_from).cast("timestamp"))
+            df = df.where(F.col("timestamp") >= F.lit(retain_from))
         # layout: dt= calendar subpartitions (time-range reads drop whole
         # files at the list level — see _tier_files) + Z-order on
         # (timestamp, level) within each date so parquet min/max stats stay
@@ -691,14 +697,10 @@ class LogStore:
         # the scale bounds come from parquet FOOTERS (timestamp, already in
         # hand from the retention check) and the full 32-bit range
         # (crc32(level) — clustering only needs distinct codes to separate,
-        # not tight bounds), so compaction pays no stats job; and the
-        # default single-file target skips range-partition sampling too.
-        from arrow_parquet_logs_spark.operators.layout import morton_code, scale_to_bits
+        # not tight bounds), so compaction pays no stats job.
+        from arrow_parquet_logs_spark.operators.layout import Z_COL, scale_to_bits, with_morton_code
 
-        out = (
-            df.withColumn("dt", F.to_date("timestamp"))
-            .withColumn("__lvl", F.crc32("level"))
-        )
+        out = df.withColumn("dt", F.to_date("timestamp"))
         if bounds is not None:
             ts_lo, ts_hi = bounds[0].timestamp(), bounds[1].timestamp()
         else:  # footer stats unavailable — one tiny agg job as fallback
@@ -707,19 +709,26 @@ class LogStore:
                 F.max(F.col("timestamp").cast("double")),
             ).collect()[0]
             ts_lo, ts_hi = row[0] or 0.0, row[1] or 1.0
-        code = morton_code(
+        out, added = with_morton_code(
+            out,
             [
-                scale_to_bits(F.col("timestamp"), ts_lo, ts_hi, 16),
-                scale_to_bits(F.col("__lvl"), 0.0, float(2**32 - 1), 16),
+                scale_to_bits("timestamp", ts_lo, ts_hi, 16),
+                scale_to_bits("crc32(level)", 0.0, float(2**32 - 1), 16),
             ],
             16,
         )
-        out = out.withColumn("__z", code)
         if target_files == 1:
-            out = out.repartition(1)  # no range-sampling job for one task
+            # the sort and the write run in one task either way; coalesce
+            # runs the scan (parquet decode, crc32, grid projection) in that
+            # task too, where repartition(1) scans split-parallel but adds a
+            # shuffle map stage: a second job and a shuffle write + read of
+            # every row. The two tie on large one-session backlogs (measured
+            # in SCALING.md); on the small sessions of steady ingest
+            # coalesce saves the job
+            out = out.coalesce(1)
         else:
-            out = out.repartitionByRange(target_files, "dt", "__z")
-        out = out.sortWithinPartitions("dt", "__z").drop("__lvl", "__z")
+            out = out.repartitionByRange(target_files, "dt", Z_COL)
+        out = out.sortWithinPartitions("dt", Z_COL).drop(*added)
         out.write.mode("overwrite").partitionBy("dt").parquet(vdir)
         files = sorted(
             os.path.relpath(os.path.join(root, f), vdir).replace(os.sep, "/")

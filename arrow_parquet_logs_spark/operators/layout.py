@@ -14,42 +14,70 @@ OPTIMIZE job over an archive partition.
 
 from __future__ import annotations
 
-from functools import reduce
-
 from pyspark.sql import Column, DataFrame, functions as F
 
+# the Morton code column :func:`with_morton_code` adds; its grid temporaries
+# are ``Z_COL_<j>``
+Z_COL = "__z"
 
-def scale_to_bits(col: Column, lo: Column | float, hi: Column | float, bits: int) -> Column:
-    """Affinely map ``col`` from [lo, hi] onto the integer grid [0, 2^bits).
+
+def _ident(name: str) -> str:
+    """``name`` as a quoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def scale_to_bits(expr: str, lo: float, hi: float, bits: int) -> Column:
+    """Affinely map the SQL expression ``expr`` (a quoted column name, or
+    e.g. ``crc32(level)``) from [lo, hi] onto the integer grid [0, 2^bits).
 
     lo/hi come from a one-row stats pass (parquet footers make it metadata-
     cheap); values outside clamp to the grid edges so stale bounds degrade
-    locality, never correctness.
+    locality, never correctness. One ``F.expr`` call: the JVM parses the
+    arithmetic once instead of Python building it op by op over Py4J.
     """
-    lo_c = lo if isinstance(lo, Column) else F.lit(float(lo))
-    hi_c = hi if isinstance(hi, Column) else F.lit(float(hi))
-    span = F.when(hi_c > lo_c, hi_c - lo_c).otherwise(F.lit(1.0))
-    frac = (col.cast("double") - lo_c) / span
-    clamped = F.least(F.greatest(frac, F.lit(0.0)), F.lit(1.0))
-    top = F.lit((1 << bits) - 1)
-    return F.least(F.floor(clamped * F.lit(float(1 << bits))).cast("bigint"), top)
+    lo_s, hi_s = (f"CAST('{float(v)!r}' AS DOUBLE)" for v in (lo, hi))
+    span = f"CASE WHEN {hi_s} > {lo_s} THEN {hi_s} - {lo_s} ELSE 1.0D END"
+    frac = f"(CAST({expr} AS DOUBLE) - {lo_s}) / ({span})"
+    clamped = f"least(greatest({frac}, 0.0D), 1.0D)"
+    return F.expr(
+        f"least(CAST(floor({clamped} * {float(1 << bits)!r}D) AS BIGINT), {(1 << bits) - 1})"
+    )
 
 
-def morton_code(cols: list[Column], bits: int = 16) -> Column:
-    """Interleave the low ``bits`` bits of each (already grid-scaled)
-    column: column j contributes its bit i at output position
+def morton_code(cols: list[str], bits: int = 16) -> Column:
+    """Interleave the low ``bits`` bits of each named (already grid-scaled,
+    integral) column: column j contributes its bit i at output position
     ``i * n_cols + j``. 64-bit output, so ``bits * len(cols) <= 63``.
-    Pure shift/mask expressions — whole-stage codegen, no Python."""
+
+    One flat expression of per-bit ``shiftleft(shiftright(c, i) & 1, i*n+j)``
+    terms, built in a single ``F.expr`` call: each input is an attribute
+    reference, so a grid value projected once (see :func:`with_morton_code`)
+    is computed once per row rather than once per bit, and building the code
+    costs one JVM call instead of several per bit. Pure shift/mask
+    arithmetic — whole-stage codegen, no Python."""
     n = len(cols)
     if not 1 <= n * bits <= 63:
         raise ValueError(f"bits*cols = {n * bits} must fit a signed 64-bit code")
-    parts = []
-    for j, c in enumerate(cols):
-        c = c.cast("bigint")
-        for i in range(bits):
-            # (c >> i & 1) << (i*n + j)  — via expr: column shift amounts
-            parts.append(F.shiftleft(F.shiftright(c, i).bitwiseAND(F.lit(1)), i * n + j))
-    return reduce(lambda a, b: a.bitwiseOR(b), parts)
+    refs = [f"CAST({_ident(c)} AS BIGINT)" for c in cols]
+    return F.expr(
+        " | ".join(
+            f"shiftleft(shiftright({r}, {i}) & 1, {i * n + j})"
+            for j, r in enumerate(refs)
+            for i in range(bits)
+        )
+    )
+
+
+def with_morton_code(df: DataFrame, grids: list[Column], bits: int = 16) -> tuple[DataFrame, list[str]]:
+    """``df`` plus the Morton code of ``grids`` (grid-scaled columns, e.g.
+    :func:`scale_to_bits`) as column :data:`Z_COL`.
+
+    Each grid value is first projected into a temporary column so the code
+    references it by name. Returns the frame and the added columns (the
+    temporaries and :data:`Z_COL`), for the caller to drop after sorting."""
+    tmp = [f"{Z_COL}_{j}" for j in range(len(grids))]
+    out = df.withColumns(dict(zip(tmp, grids))).withColumn(Z_COL, morton_code(tmp, bits))
+    return out, [*tmp, Z_COL]
 
 
 def zorder_by(
@@ -59,7 +87,9 @@ def zorder_by(
     target_files: int | None = None,
     partition_cols: list[str] | None = None,
 ) -> DataFrame:
-    """Rewrite ``df`` in Z-order along ``cols`` (numeric columns).
+    """Rewrite ``df`` in Z-order along ``cols`` (numeric top-level columns,
+    each name taken literally: ``"a.b"`` is a column named ``a.b``, not a
+    struct field).
 
     One tiny stats pass finds per-column bounds, then a single
     range-partition + in-partition sort on the interleaved code produces
@@ -74,22 +104,23 @@ def zorder_by(
     into ~one directory (without it, every task can straddle every
     directory and file counts multiply by the partition count).
     """
+    # the stats and the scale expressions name each column by the same
+    # quoted identifier, so both resolve it the same way
     stats = df.agg(
-        *[F.min(F.col(c).cast("double")).alias(f"lo_{c}") for c in cols],
-        *[F.max(F.col(c).cast("double")).alias(f"hi_{c}") for c in cols],
+        *[F.min(F.col(_ident(c)).cast("double")).alias(f"lo_{c}") for c in cols],
+        *[F.max(F.col(_ident(c)).cast("double")).alias(f"hi_{c}") for c in cols],
     ).collect()[0]
     if any(stats[f"lo_{c}"] is None for c in cols):
         # empty input (or an all-NULL column): nothing to cluster — return
         # as-is instead of crashing on float(None) in the scale expressions
         return df
     scaled = [
-        scale_to_bits(F.col(c), stats[f"lo_{c}"], stats[f"hi_{c}"], bits) for c in cols
+        scale_to_bits(_ident(c), stats[f"lo_{c}"], stats[f"hi_{c}"], bits) for c in cols
     ]
-    code = morton_code(scaled, bits)
-    out = df.withColumn("__z", code)
+    out, added = with_morton_code(df, scaled, bits)
     pcols = list(partition_cols or [])
     if target_files:
-        out = out.repartitionByRange(target_files, *pcols, "__z")
+        out = out.repartitionByRange(target_files, *pcols, Z_COL)
     else:
-        out = out.repartitionByRange(*pcols, "__z")
-    return out.sortWithinPartitions(*pcols, "__z").drop("__z")
+        out = out.repartitionByRange(*pcols, Z_COL)
+    return out.sortWithinPartitions(*pcols, Z_COL).drop(*added)

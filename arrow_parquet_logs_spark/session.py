@@ -11,7 +11,19 @@ is the part that affects *semantics* and *local-mode efficiency*:
 - AQE on (runtime re-planning: skew joins, partition coalescing) — this is
   the 100 TB safety net,
 - shuffle partitions sized to local cores (the 200 default over-parallelizes
-  local runs; on a real cluster this would be ~2-3× total cores).
+  local runs; on a real cluster this would be ~2-3× total cores),
+- PySpark's DataFrame call-site capture off
+  (``spark.python.sql.dataFrameDebugging.enabled=false``): by default every
+  DataFrame/Column API call also runs ``getActiveSession``, a ``conf.get``
+  and an origin set + clear over Py4J, only to attach the Python call site
+  to error contexts. PySpark reads the flag ONCE per process, on the first
+  API call made with an active session, and caches it — so it is pinned at
+  build time in :func:`get_spark`; setting it on a live session (or in
+  :func:`ensure_runtime_confs`) has no effect once any call has been made.
+  The trade-off: an analysis or ANSI runtime error's ``== DataFrame ==``
+  context names a JVM frame instead of the Python ``file:line`` that built
+  the failing expression (the error class, message and traceback stay). To
+  get that line back while debugging, build the session without this conf.
 """
 
 from __future__ import annotations
@@ -119,6 +131,8 @@ def get_spark(app_name: str = "arrow-parquet-logs-spark", cpus: int | str | None
             else "false",
         )
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # read once per process and cached (see the module docstring)
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # keep managed-table data (bucketed tables in tests) out of the repo
         .config(
             "spark.sql.warehouse.dir",

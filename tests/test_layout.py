@@ -8,7 +8,13 @@ import glob
 import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
-from arrow_parquet_logs_spark.operators.layout import morton_code, scale_to_bits, zorder_by
+from arrow_parquet_logs_spark.operators.layout import (
+    Z_COL,
+    morton_code,
+    scale_to_bits,
+    with_morton_code,
+    zorder_by,
+)
 from arrow_parquet_logs_spark.sources.tables import load_table
 
 
@@ -27,20 +33,52 @@ def test_morton_code_matches_reference(spark):
     got = {
         (r.x, r.y): r.code
         for r in df.select(
-            "x", "y", morton_code([F.col("x"), F.col("y")], 16).alias("code")
+            "x", "y", morton_code(["x", "y"], 16).alias("code")
         ).collect()
     }
     for x, y in rows:
         assert got[(x, y)] == _py_morton([x, y], 16), (x, y)
 
 
+def test_morton_code_references_each_projected_grid_once(spark):
+    df = spark.createDataFrame([("INFO", 1.0), ("WARN", 2.0), ("ERROR", 0.5)], "level string, t double")
+    grids = [
+        scale_to_bits("t", 0.0, 2.0, 16),
+        scale_to_bits("crc32(level)", 0.0, float(2**32 - 1), 16),
+    ]
+    out, added = with_morton_code(df, grids, 16)
+    assert added == [f"{Z_COL}_0", f"{Z_COL}_1", Z_COL]
+    # one hash per row, not one per code bit
+    assert out._jdf.queryExecution().optimizedPlan().toString().count("crc32(") == 1
+    for r in out.collect():
+        assert r[Z_COL] == _py_morton([r[added[0]], r[added[1]]], 16)
+
+
+def test_zorder_by_names_columns_literally_in_stats_and_scale(spark):
+    """A dotted name is one top-level column in both the stats pass and the
+    code; a struct path resolves in neither (it fails at the stats pass)."""
+    import pytest
+    from pyspark.errors import AnalysisException
+
+    df = spark.createDataFrame(
+        [(float(i), float((i * 7) % 10), (float(i),)) for i in range(10)],
+        "`a.b` double, y double, s struct<x: double>",
+    )
+    got = zorder_by(df, ["a.b", "y"], bits=4, target_files=1).collect()
+    assert sorted(r["a.b"] for r in got) == [float(i) for i in range(10)]
+    codes = [_py_morton([min(int(r["a.b"] / 9.0 * 16), 15), min(int(r.y / 9.0 * 16), 15)], 4) for r in got]
+    assert codes == sorted(codes)
+    with pytest.raises(AnalysisException):
+        zorder_by(df, ["s.x", "y"], bits=4, target_files=1)
+
+
 def test_scale_to_bits_clamps_and_covers(spark):
     df = spark.range(1).select(
-        scale_to_bits(F.lit(-5.0), 0.0, 10.0, 8).alias("below"),
-        scale_to_bits(F.lit(0.0), 0.0, 10.0, 8).alias("lo"),
-        scale_to_bits(F.lit(10.0), 0.0, 10.0, 8).alias("hi"),
-        scale_to_bits(F.lit(99.0), 0.0, 10.0, 8).alias("above"),
-        scale_to_bits(F.lit(5.0), 5.0, 5.0, 8).alias("degenerate"),
+        scale_to_bits("-5.0D", 0.0, 10.0, 8).alias("below"),
+        scale_to_bits("0.0D", 0.0, 10.0, 8).alias("lo"),
+        scale_to_bits("10.0D", 0.0, 10.0, 8).alias("hi"),
+        scale_to_bits("99.0D", 0.0, 10.0, 8).alias("above"),
+        scale_to_bits("5.0D", 5.0, 5.0, 8).alias("degenerate"),
     )
     r = df.collect()[0]
     assert r.below == 0 and r.lo == 0

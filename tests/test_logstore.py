@@ -574,3 +574,95 @@ def test_unfiltered_count_runs_no_job_and_read_logs_one(spark, store):
     # the filtered path still runs Spark (a predicate needs a scan)
     n, jobs = _jobs_run(spark, lambda: store.count(container="a", filters=[("message", "==", "late")]))
     assert n == 1 and jobs >= 1
+
+
+def _write_plans(spark, out_dir):
+    """Executed physical plans of the recent SQL executions that wrote
+    ``out_dir``, from the session's SQL status store."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    ss = spark._jsparkSession.sharedState().statusStore()
+    recent = ss.executionsList(max(0, ss.executionsCount() - 8), 8)
+    plans = [recent.apply(i).physicalPlanDescription() for i in range(recent.size())]
+    return [p for p in plans if "InsertIntoHadoopFsRelationCommand" in p and out_dir in p]
+
+
+def test_single_file_compaction_is_one_job_without_exchange(spark, store):
+    for d in (1, 2):
+        for h in range(3):
+            _w(store, ts=f"2024-01-0{d}T{h:02d}:00:00Z", level=("INFO", "WARN")[h % 2], msg=f"{d}{h}")
+    res, jobs = _jobs_run(spark, lambda: store.compact("a", "s1"))
+    assert res["compacted"] and jobs == 1
+    (plan,) = _write_plans(spark, os.path.join(store.root, "archive", "container=a", "session=s1", "v1"))
+    # the sort and the write share one task: no shuffle in front of them,
+    # and the level hash is computed once per row, not once per code bit
+    assert "Exchange" not in plan
+    assert plan.count("crc32(") == 1
+    assert store.count(container="a", session="s1") == 6
+
+
+def test_compaction_zorders_rows_within_each_date(store):
+    import glob
+    import math
+    import zlib
+    from datetime import datetime, timedelta, timezone
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from tests.test_layout import _py_morton
+
+    def grid(v, lo, hi, bits=16):  # layout.scale_to_bits, in Python
+        frac = min(max((v - lo) / (hi - lo if hi > lo else 1.0), 0.0), 1.0)
+        return min(math.floor(frac * float(1 << bits)), (1 << bits) - 1)
+
+    levels = ("DEBUG", "INFO", "WARN", "ERROR")
+    written = []
+    for d in (1, 2):
+        for k in range(40):
+            ts = f"2024-01-0{d}T{(k * 7) % 24:02d}:{(k * 13) % 60:02d}:{k % 60:02d}.{k:06d}Z"
+            written.append(ts)
+            _w(store, ts=ts, level=levels[k % 4], msg=f"{d}-{k}")
+    # the footer bounds compaction scales by: min/max of the written instants
+    epoch = datetime(1970, 1, 1, tzinfo=timezone.utc)
+    us = [(datetime.fromisoformat(t.replace("Z", "+00:00")) - epoch) // timedelta(microseconds=1) for t in written]
+    lo, hi = min(us) / 1e6, max(us) / 1e6
+    store.compact("a", "s1")
+    vdir = os.path.join(store.root, "archive", "container=a", "session=s1", "v1")
+    files = sorted(glob.glob(os.path.join(vdir, "dt=*", "*.parquet")))
+    assert len(files) == 2
+    time_sorted = []
+    for f in files:
+        t = pq.read_table(f, columns=["timestamp", "level"])
+        ts_us = t.column("timestamp").cast(pa.int64()).to_pylist()
+        codes = [
+            _py_morton([grid(u / 1e6, lo, hi), grid(zlib.crc32(lv.encode()), 0.0, float(2**32 - 1))], 16)
+            for u, lv in zip(ts_us, t.column("level").to_pylist())
+        ]
+        assert codes == sorted(codes), f
+        time_sorted.append(ts_us == sorted(ts_us))
+    assert not all(time_sorted)  # the order is the Z-curve's, not time's
+
+
+def test_naive_datetime_bounds_mean_utc_before_and_after_compaction(store, monkeypatch):
+    """A naive bound is UTC for ingest and for dt= pruning, so Spark's
+    predicate must read it as UTC too — whatever the process time zone."""
+    import time
+    from datetime import datetime
+
+    for d, h in ((1, 23), (2, 12), (3, 0), (3, 2)):
+        _w(store, ts=f"2024-01-0{d}T{h:02d}:00:00Z", msg=f"d{d}h{h}")
+    q = {"container": "a", "session": "s1", "start_ts": datetime(2024, 1, 2), "end_ts": datetime(2024, 1, 2, 20)}
+    monkeypatch.setenv("TZ", "America/Los_Angeles")
+    time.tzset()
+    try:
+        before = ([r["message"] for r in store.read_logs(**q)], store.count(**q))
+        store.compact("a", "s1")
+        after = ([r["message"] for r in store.read_logs(**q)], store.count(**q))
+        # a naive retention cutoff is the same UTC instant (inclusive)
+        store.compact("a", "s1", retain_from=datetime(2024, 1, 2, 12))
+        kept = [r["message"] for r in store.read_logs(container="a", session="s1")]
+    finally:
+        monkeypatch.undo()
+        time.tzset()
+    assert before == after == (["d2h12"], 1)
+    assert kept == ["d2h12", "d3h0", "d3h2"]

@@ -27,3 +27,10 @@ def test_default_driver_memory_never_exceeds_physical_ram(monkeypatch):
 def test_session_heap_is_env_or_derived_default(spark):
     want = os.environ.get("SPARK_DRIVER_MEMORY") or session.default_driver_memory()
     assert spark.sparkContext.getConf().get("spark.driver.memory") == want
+
+
+def test_session_turns_off_per_call_call_site_capture(spark):
+    from pyspark.errors.utils import is_debugging_enabled
+
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    assert is_debugging_enabled() is False
