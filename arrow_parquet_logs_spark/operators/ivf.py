@@ -108,6 +108,16 @@ def fit_kmeans(
     return _lloyd(x, k, iters)
 
 
+def _nearest(x, cents):
+    """Index of each row's nearest centroid: ``argmin(|x|² + |c|² − 2x·cᵀ)``
+    over (n, d) × (k, d) float64 matrices, one (n, k) dgemm. numpy
+    ``argmin`` takes the first minimum, so ties go to the lowest index.
+    The one nearest-centroid kernel of the k-means fit, cell assignment
+    and the IVF-PQ fit and encode."""
+    d2 = (x * x).sum(axis=1)[:, None] + (cents * cents).sum(axis=1)[None, :]
+    return (d2 - 2.0 * (x @ cents.T)).argmin(axis=1)
+
+
 def _lloyd(x, k: int, iters: int) -> list[list[float]]:
     """Deterministic Lloyd's iterations on an (n, d) float64 matrix.
 
@@ -123,11 +133,8 @@ def _lloyd(x, k: int, iters: int) -> list[list[float]]:
     if len(x) < k:
         raise ValueError(f"need ≥{k} vectors to fit {k} cells, got {len(x)}")
     cent = x[:k].copy()  # id-ordered prefix init — deterministic
-    x_sq = (x * x).sum(axis=1)  # (n,)
     for _ in range(iters):
-        c_sq = (cent * cent).sum(axis=1)  # (k,)
-        d = x_sq[:, None] + c_sq[None, :] - 2.0 * (x @ cent.T)  # (n, k)
-        assign = d.argmin(axis=1)  # numpy argmin takes first minimum → idx tie-break
+        assign = _nearest(x, cent)
         for c in range(k):
             members = x[assign == c]
             if len(members):
@@ -189,7 +196,6 @@ def assign_cells(
     from pyspark.sql import types as T
 
     C = np.array(centroids, dtype=np.float64)
-    c_sq = (C * C).sum(axis=1)
     # fresh StructType — StructType.add would MUTATE the input frame's
     # cached schema object in place, desyncing it from the JVM plan
     out_schema = T.StructType(
@@ -206,8 +212,7 @@ def assign_cells(
                 X = np.array(
                     [np.asarray(pdf[vec_col].iloc[i], dtype=np.float64) for i in live_idx]
                 )
-                d2 = (X * X).sum(axis=1)[:, None] + c_sq[None, :] - 2.0 * (X @ C.T)
-                near = d2.argmin(axis=1)
+                near = _nearest(X, C)
                 for j, i in enumerate(live_idx):
                     cells[i] = int(near[j])
             out = pdf.copy()

@@ -14,9 +14,11 @@ Spark-first shape:
 - encode: one Arrow-batched numpy pass per corpus scan — components
   quantize to integer micro-units (floor(x·10⁶) — exact int64 arithmetic,
   no float-summation-order hazard) and each subvector takes its nearest
-  codebook entry, first-minimum tie-break. A Catalyst encode (explode →
-  broadcast codebook join → two aggregations) fans every vector into d·ks
-  joined rows and was rejected for that; the higher-order
+  codebook entry, first-minimum tie-break. One kernel (``_ivfpq_codes``)
+  serves both the IVF-PQ residual encode and the flat :func:`encode_pq`.
+  A Catalyst encode (explode → broadcast codebook join → two
+  aggregations) fans every vector into d·ks joined rows and was rejected
+  for that; the higher-order
   ``aggregate``/``zip_with`` lambda form runs interpreted per element
   (~3 ms/row measured for the same shape of fold in IVF cell assignment).
 - ADC: the query-side LUT (q_id, subspace, code, partial-dot) is built on
@@ -29,9 +31,11 @@ m lookups, and the encode adds no shuffle at all.
 Two codebook sources:
 
 - :func:`fit_pq` — per-subspace deterministic Lloyd's on an id-ordered
-  driver sample (same contract as ``ivf.fit_kmeans``). Production path;
-  centroids depend on numpy reduction order, so queries built on it use a
-  recall gate, not a SQL oracle (the ``ann_ivf_kmeans`` precedent).
+  driver sample (``ivf.kmeans_sample``, same contract as
+  ``ivf.fit_kmeans``); :func:`fit_ivfpq` runs the same per-subspace fit
+  on residuals. Production path; centroids depend on numpy reduction
+  order, so queries built on it use a recall gate, not a SQL oracle (the
+  ``ann_ivf_kmeans`` precedent).
 - :func:`rademacher_codebooks` — data-independent ±1 entries derived from
   the portable md5 hash64 of "pq:subspace:code:component". Any engine
   regenerates them from SQL text alone, making the entire encode+ADC
@@ -45,7 +49,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from arrow_parquet_logs_spark.operators.ivf import _lloyd
+from arrow_parquet_logs_spark.operators.ivf import _lloyd, _nearest, kmeans_sample
 
 #: integer micro-unit scale shared with the SRP/centroid operators.
 SCALE = 1_000_000
@@ -68,6 +72,34 @@ def rademacher_codebooks(m: int = 8, ks: int = 16, sub: int = 8) -> list[list[li
     ]
 
 
+def _fit_matrix(emb, m, id_col, vec_col, sample_rows, sample):
+    """The (n, d) float64 fit matrix: ``sample`` when the caller already
+    holds it, else the id-ordered prefix (``ivf.kmeans_sample``)."""
+    import numpy as np
+
+    if sample is None:
+        sample, _ = kmeans_sample(emb, id_col, vec_col, sample_rows)
+    x = np.asarray(sample, dtype=np.float64)
+    if x.ndim != 2 or x.shape[1] % m:
+        raise ValueError(f"need (n, d) sample with d % {m} == 0, got {x.shape}")
+    return x
+
+
+def _subspace_books(x, m: int, ks: int, iters: int) -> list[list[list[int]]]:
+    """Deterministic Lloyd's on each of the m contiguous subspaces of x,
+    entries quantized to integer micro-units (floor(c·10⁶))."""
+    import numpy as np
+
+    sub = x.shape[1] // m
+    return [
+        [
+            [int(np.floor(v * SCALE)) for v in entry]
+            for entry in _lloyd(x[:, j * sub : (j + 1) * sub], ks, iters)
+        ]
+        for j in range(m)
+    ]
+
+
 def fit_pq(
     emb: DataFrame,
     m: int = 8,
@@ -85,23 +117,8 @@ def fit_pq(
     ``sample``: a pre-collected (n, d) fit matrix (ivf.kmeans_sample) —
     callers that already sampled for sizing pass it to avoid a second
     identical TakeOrdered job."""
-    import numpy as np
-
-    if sample is not None:
-        x = np.asarray(sample, dtype=np.float64)
-    else:
-        rows = emb.select(id_col, vec_col).orderBy(id_col).limit(sample_rows).collect()
-        x = np.array([r[1] for r in rows], dtype=np.float64)
-    if x.ndim != 2 or x.shape[1] % m:
-        raise ValueError(f"need (n, d) sample with d % {m} == 0, got {x.shape}")
-    sub = x.shape[1] // m
-    return [
-        [
-            [int(np.floor(v * SCALE)) for v in entry]
-            for entry in _lloyd(x[:, j * sub : (j + 1) * sub], ks, iters)
-        ]
-        for j in range(m)
-    ]
+    x = _fit_matrix(emb, m, id_col, vec_col, sample_rows, sample)
+    return _subspace_books(x, m, ks, iters)
 
 
 def encode_pq(
@@ -119,45 +136,14 @@ def encode_pq(
     any engine. (q−s)² ≤ 9·10¹² and sub ≤ 64 keep sums far from overflow.
     A join-and-aggregate encode in Catalyst fans every vector into d·ks
     joined rows through a shuffle (~1000 rows per vector at the default
-    geometry); here those rows never exist. NULL vectors emit no codes."""
-    import numpy as np
-    from pyspark.sql import types as T
+    geometry); here those rows never exist. NULL vectors emit no codes.
 
-    from arrow_parquet_logs_spark.operators._parallel import spread_for_python
-
-    books = np.array(codebooks, dtype=np.int64)  # (m, ks, sub)
-    m, _, sub = books.shape
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, emb.schema[id_col].dataType),
-            T.StructField("j", T.IntegerType()),
-            T.StructField("code", T.IntegerType()),
-        ]
-    )
-
-    def gen(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            live = [i for i, x in enumerate(pdf[vec_col]) if x is not None]
-            if not live:
-                continue
-            X = np.array([np.asarray(pdf[vec_col].iloc[i], dtype=np.float64) for i in live])
-            Q = np.floor(X * SCALE).astype(np.int64)  # (n, d)
-            n = len(live)
-            codes = np.empty((n, m), dtype=np.int64)
-            for j in range(m):
-                d2 = ((Q[:, j * sub : (j + 1) * sub][:, None, :] - books[j][None, :, :]) ** 2).sum(axis=2)
-                codes[:, j] = d2.argmin(axis=1)
-            yield pd.DataFrame(
-                {
-                    id_col: np.repeat(pdf[id_col].to_numpy()[live], m),
-                    "j": np.tile(np.arange(m, dtype=np.int32), n),
-                    "code": codes.reshape(-1).astype(np.int32),
-                }
-            )
-
-    return spread_for_python(emb.select(id_col, vec_col)).mapInPandas(gen, out_schema)
+    This is :func:`_ivfpq_codes` against ONE all-zero coarse centroid of
+    width m·sub: every vector lands in cell 0 and its residual
+    floor(x·10⁶) − floor(0·10⁶) is floor(x·10⁶), so the codes are exactly
+    the flat PQ codes; the constant ``cell`` column is dropped."""
+    width = len(codebooks) * len(codebooks[0][0])
+    return _ivfpq_codes(emb, [[0.0] * width], codebooks, id_col, vec_col).drop("cell")
 
 
 def adc_lut(
@@ -267,25 +253,11 @@ def pq_rerank_topk(
     (operators.similarity ranking contract), and the true top-k of that
     pool is returned. This is the production ANN shape: the expensive exact
     math touches rerank·|queries| rows, not the corpus."""
-    from arrow_parquet_logs_spark.operators.similarity import _cos, _ranked, _with_vec_and_norm
+    from arrow_parquet_logs_spark.operators.similarity import _rerank_exact
 
     cand = pq_adc_topk(emb, queries, codebooks, k=rerank, id_col=id_col, vec_col=vec_col)
-    c = _with_vec_and_norm(emb, id_col, vec_col, "c")
-    q = _with_vec_and_norm(queries, id_col, vec_col, "q")
-    # broadcast the CAND side (≤ rerank·Q rows BY CONSTRUCTION): its size
-    # estimate inherits the corpus scan, so the planner otherwise broadcast
-    # the CORPUS's vectors into this join (scale-inverted — the corpus must
-    # stream, the bounded shortlist must ship)
-    pairs = (
-        c.join(
-            F.broadcast(cand.select("q_id", F.col(id_col).alias("c_id"))), "c_id"
-        )
-        .join(F.broadcast(q), "q_id")
-        .select("q_id", F.col("c_id").alias("vec_id"), _cos().alias("cosine"))
-    )
-    # the rerank pool is ≤ rerank·Q rows BY CONSTRUCTION — the partial-topk
-    # stage would cost a Python pass to prune an already-shortlist frame
-    return _ranked(pairs, k, prune=False)
+    short = cand.select("q_id", F.col(id_col).alias("c_id"))
+    return _rerank_exact(short, emb, queries, k, id_col, vec_col)
 
 
 # ---- IVF-PQ: coarse cells × residual product codes -------------------------
@@ -314,30 +286,10 @@ def fit_ivfpq(
     identical TakeOrdered job."""
     import numpy as np
 
-    if sample is not None:
-        x = np.asarray(sample, dtype=np.float64)
-    else:
-        rows = emb.select(id_col, vec_col).orderBy(id_col).limit(sample_rows).collect()
-        x = np.array([r[1] for r in rows], dtype=np.float64)
-    if x.ndim != 2 or x.shape[1] % m:
-        raise ValueError(f"need (n, d) sample with d % {m} == 0, got {x.shape}")
+    x = _fit_matrix(emb, m, id_col, vec_col, sample_rows, sample)
     cents = np.array(_lloyd(x, k, iters))
-    # BLAS distance form, not the (n, k, d) broadcast cube — same reasoning
-    # (and same ulp/tie tolerance) as ivf._lloyd's docstring: at the 100k
-    # sample the cube is an ~800 MB allocation, the dgemm is ~12 MB.
-    x_sq = (x * x).sum(axis=1)
-    c_sq = (cents * cents).sum(axis=1)
-    assign = (x_sq[:, None] + c_sq[None, :] - 2.0 * (x @ cents.T)).argmin(axis=1)
-    res = x - cents[assign]
-    sub = x.shape[1] // m
-    books = [
-        [
-            [int(np.floor(v * SCALE)) for v in entry]
-            for entry in _lloyd(res[:, j * sub : (j + 1) * sub], ks, iters)
-        ]
-        for j in range(m)
-    ]
-    return [[float(v) for v in c] for c in cents], books
+    res = x - cents[_nearest(x, cents)]
+    return [[float(v) for v in c] for c in cents], _subspace_books(res, m, ks, iters)
 
 
 def _ivfpq_codes(
@@ -357,17 +309,18 @@ def _ivfpq_codes(
     boundary twice, with a round-robin repartition between the stages
     (the second stage's spread gate sees a shuffle-rooted frame) — at the
     corpus-dominant stage that is 2× the Arrow traffic and one extra full
-    exchange for zero extra work. Cell assignment is ``ivf.assign_cells``'s
-    BLAS argmin; the residual v − centroid[cell] is coded on
-    :func:`encode_pq`'s int64 micro-unit grid with the same first-minimum
-    tie-break."""
+    exchange for zero extra work. Cell assignment is ``ivf._nearest`` (the
+    BLAS argmin of ``ivf.assign_cells``); the residual
+    floor(v·10⁶) − floor(centroid[cell]·10⁶) is coded on the int64
+    micro-unit grid, nearest codebook entry with the first-minimum
+    tie-break. The one PQ encode kernel: :func:`encode_pq` is this pass
+    against a single all-zero centroid."""
     import numpy as np
     from pyspark.sql import types as T
 
     from arrow_parquet_logs_spark.operators._parallel import spread_for_python
 
     C = np.array(centroids, dtype=np.float64)  # (k, d)
-    c_sq = (C * C).sum(axis=1)
     cents_i = np.floor(C * SCALE).astype(np.int64)
     books = np.array(codebooks, dtype=np.int64)  # (m, ks, sub)
     m, _, sub = books.shape
@@ -388,9 +341,7 @@ def _ivfpq_codes(
             if not live:
                 continue
             X = np.array([np.asarray(pdf[vec_col].iloc[i], dtype=np.float64) for i in live])
-            # cell assignment: argmin(|x|^2 - 2x.c^T + |c|^2), first minimum
-            d2 = (X * X).sum(axis=1)[:, None] + c_sq[None, :] - 2.0 * (X @ C.T)
-            cells = d2.argmin(axis=1)
+            cells = _nearest(X, C)
             # residual encode on the int64 micro-unit grid
             Q = np.floor(X * SCALE).astype(np.int64) - cents_i[cells]
             n = len(live)
@@ -406,7 +357,7 @@ def _ivfpq_codes(
                     "j": np.tile(np.arange(m, dtype=np.int32), n),
                     "code": codes.reshape(-1).astype(np.int32),
                 }
-            )[[f.name for f in out_schema.fields]]
+            )
 
     return spread_for_python(emb.select(id_col, vec_col)).mapInPandas(gen, out_schema)
 
@@ -430,29 +381,19 @@ def materialize_ivfpq(
     (``load_ivfpq_model``) instead of re-fitting — a re-fit on a changed
     corpus would silently mis-decode every stored code.
 
-    Codes are CLUSTERED before the write: without it, every encode task
-    holds rows of every cell and dynamic partitioning writes a file per
-    (task × cell) — measured 503 files for a 16-cell sf0.1 index, and the
-    file count (hence search-side open cost) grows with cluster width.
-    ``files_per_cell`` bounds the opposite failure at 100 TB (one giant
-    file per cell = one writer task per cell): cells split into that many
-    hash sub-buckets, sized so each file lands near the parquet sweet
-    spot."""
-    enc = _ivfpq_codes(emb, centroids, codebooks, id_col, vec_col)
-    enc = _cluster_by_cell(enc, id_col)
-    enc.write.mode("overwrite").partitionBy("cell").parquet(path)
+    Codes are clustered by cell before the write (:func:`_write_by_cell`)."""
+    _write_by_cell(_ivfpq_codes(emb, centroids, codebooks, id_col, vec_col), path, "overwrite")
     save_ivfpq_model(centroids, codebooks, path)
 
 
-def _cluster_by_cell(enc, id_col: str, files_per_cell: int = 1):
-    """Shuffle code rows so each ``cell=`` directory is written by
-    ``files_per_cell`` tasks (codes are ~1/32 of corpus bytes, so this
-    extra shuffle is cheap relative to the encode scan it follows)."""
-    if files_per_cell <= 1:
-        return enc.repartition("cell")
-    return enc.repartition(
-        F.col("cell"), F.pmod(F.xxhash64(F.col(id_col)), F.lit(files_per_cell))
-    )
+def _write_by_cell(enc: DataFrame, path: str, mode: str) -> None:
+    """Write code rows into ``cell=`` directories, one writer task per
+    cell. Without the shuffle every encode task holds rows of every cell
+    and dynamic partitioning writes a file per (task × cell) — measured
+    503 files for a 16-cell sf0.1 index, and the file count (hence
+    search-side open cost) grows with cluster width. Codes are ~1/32 of
+    corpus bytes, so the shuffle is cheap next to the encode scan."""
+    enc.repartition("cell").write.mode(mode).partitionBy("cell").parquet(path)
 
 
 def save_ivfpq_model(
@@ -503,9 +444,7 @@ def append_to_ivfpq(
     the batch lands in). The fit amortizes over many ingest batches; a
     periodic re-fit + full rewrite handles centroid/codebook drift — the
     same maintenance contract as ``ivf.append_to_cells``."""
-    enc = _ivfpq_codes(emb_new, centroids, codebooks, id_col, vec_col)
-    enc = _cluster_by_cell(enc, id_col)
-    enc.write.mode("append").partitionBy("cell").parquet(path)
+    _write_by_cell(_ivfpq_codes(emb_new, centroids, codebooks, id_col, vec_col), path, "append")
 
 
 def split_hot_cells(
@@ -549,10 +488,6 @@ def split_hot_cells(
     appended_child_index)``. Cost: one bounded metadata aggregate over the
     code rows + per hot cell one sample fit and a two-directory rewrite —
     never a corpus scan."""
-    import numpy as np
-
-    from arrow_parquet_logs_spark.operators.ivf import _lloyd
-
     cents, books = load_ivfpq_model(path)
     m = len(books)
     codes = spark.read.parquet(path)
@@ -570,8 +505,7 @@ def split_hot_cells(
     for c in hot:
         ids = codes.where(F.col("cell") == c).select(id_col).distinct()
         vecs = emb.join(ids, id_col, "left_semi").where(F.col(vec_col).isNotNull())
-        sample = vecs.select(id_col, vec_col).orderBy(id_col).limit(sample_rows).collect()
-        x = np.array([r[1] for r in sample], dtype=np.float64)
+        x, _ = kmeans_sample(vecs, id_col, vec_col, sample_rows)
         kids = _lloyd(x, 2, iters)
         new_idx = len(new_cents)
         new_cents[c] = [float(v) for v in kids[0]]
@@ -581,11 +515,10 @@ def split_hot_cells(
         enc = enc.withColumn(
             "cell", F.when(F.col("cell") == 0, F.lit(c)).otherwise(F.lit(new_idx))
         )
-        enc = _cluster_by_cell(enc, id_col)
         prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         try:
-            enc.write.mode("overwrite").partitionBy("cell").parquet(path)
+            _write_by_cell(enc, path, "overwrite")
         finally:
             spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
     save_ivfpq_model(new_cents, books, path)
@@ -660,7 +593,7 @@ def search_ivfpq(
     scan-and-collect job. Must contain exactly the rows of ``queries``."""
     import numpy as np
 
-    from arrow_parquet_logs_spark.operators.similarity import _cos, _ranked, _with_vec_and_norm
+    from arrow_parquet_logs_spark.operators.similarity import _rerank_exact
 
     m, ks = len(codebooks), len(codebooks[0])
     sub = len(codebooks[0][0])
@@ -744,21 +677,12 @@ def search_ivfpq(
     # ≤ rerank·P survivors on the same (adist asc, id asc) order
     approx = partial_topk(approx, ["q_id"], [("adist", True), (id_col, True)], rerank)
     wnd = W.partitionBy("q_id").orderBy(F.col("adist"), F.col(id_col))
-    cand = approx.withColumn("arn", F.row_number().over(wnd)).where(F.col("arn") <= rerank)
-
-    c = _with_vec_and_norm(emb, id_col, vec_col, "c")
-    q = _with_vec_and_norm(queries, id_col, vec_col, "q")
-    # broadcast the CAND side (≤ rerank·Q rows BY CONSTRUCTION) — see
-    # pq_rerank_topk: the corpus streams, the bounded shortlist ships
-    pairs = (
-        c.join(
-            F.broadcast(cand.select("q_id", F.col(id_col).alias("c_id"))), "c_id"
-        )
-        .join(F.broadcast(q), "q_id")
-        .select("q_id", F.col("c_id").alias("vec_id"), _cos().alias("cosine"))
+    short = (
+        approx.withColumn("arn", F.row_number().over(wnd))
+        .where(F.col("arn") <= rerank)
+        .select("q_id", F.col(id_col).alias("c_id"))
     )
-    # rerank pool ≤ rerank·Q rows by construction: skip the pruning pass
-    return _ranked(pairs, k, prune=False)
+    return _rerank_exact(short, emb, queries, k, id_col, vec_col)
 
 
 def start_stream_ivfpq_ingest_maintained(

@@ -78,6 +78,25 @@ def _ranked(pairs: DataFrame, k: int, prune: bool = True) -> DataFrame:
     )
 
 
+def _rerank_exact(
+    short: DataFrame, emb: DataFrame, queries: DataFrame, k: int, id_col: str, vec_col: str
+) -> DataFrame:
+    """Exact-cosine top-k of a (q_id, c_id) shortlist — the verification
+    step behind every compressed-domain candidate scan (PQ, IVF-PQ,
+    binary quantization). The SHORTLIST is broadcast (≤ rerank·Q rows by
+    construction) and the corpus streams: its size estimate inherits the
+    corpus scan, so without the hint the planner broadcast the corpus's
+    vectors instead. The pool is already shortlist-sized, so the ranker
+    skips its pruning pass."""
+    pairs = (
+        _with_vec_and_norm(emb, id_col, vec_col, "c")
+        .join(F.broadcast(short.select("q_id", "c_id")), "c_id")
+        .join(F.broadcast(_with_vec_and_norm(queries, id_col, vec_col, "q")), "q_id")
+        .select("q_id", F.col("c_id").alias("vec_id"), _cos().alias("cosine"))
+    )
+    return _ranked(pairs, k, prune=False)
+
+
 def ivf_topk(
     emb: DataFrame,
     queries: DataFrame,
@@ -246,16 +265,10 @@ def binary_quantized_topk(
     short = (
         pairs.withColumn("hrn", F.row_number().over(w))
         .where(F.col("hrn") <= shortlist)
-        .select("q_id", "vec_id")
+        .select("q_id", F.col("vec_id").alias("c_id"))
     )
     # stage 2: exact cosine on the shortlist·Q pool only
-    rer = (
-        short.withColumnRenamed("vec_id", "c_id")
-        .join(_with_vec_and_norm(emb, id_col, vec_col, "c"), "c_id")
-        .join(F.broadcast(_with_vec_and_norm(queries, id_col, vec_col, "q")), "q_id")
-        .select("q_id", F.col("c_id").alias("vec_id"), _cos().alias("cosine"))
-    )
-    return _ranked(rer, k, prune=False)
+    return _rerank_exact(short, emb, queries, k, id_col, vec_col)
 
 
 def brute_force_topk(

@@ -158,12 +158,77 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return S.ivf_topk(emb, emb.where(F.col("vec_id") < 10), k=5)
 
 
-@register(
-    "ann_ivf_kmeans",
-    oracle="""
+#: oracle of the learned-index rows (``ann_ivf_kmeans``, ``ann_pq_rerank``,
+#: ``ann_ivfpq_search``): their centroids and codebooks come from a numpy
+#: fit no SQL can replay, so each row returns a recall gate and the oracle
+#: states that every query passes it
+_RECALL_ORACLE = """
     SELECT vec_id AS q_id, true AS recall_ok
     FROM embeddings WHERE vec_id < 10 ORDER BY q_id
-    """,
+    """
+
+
+def _gate_queries(emb: DataFrame, x, ids):
+    """The recall gate's query set, vec_id < 10, as a frame and as
+    driver-side ``(id, vector)`` rows sliced from the id-ordered fit sample
+    ``(x, ids)`` of ``ivf.kmeans_sample(with_ids=True)``: every such row is
+    in the prefix by construction, so no second scan-and-collect job."""
+    q = emb.where(F.col("vec_id") < 10)
+    return q, [(int(i), v.tolist()) for i, v in zip(ids, x) if i < 10]
+
+
+def _recall_gate(approx: DataFrame, exact: DataFrame, k: int, n_queries: int) -> DataFrame:
+    """(q_id, recall_ok) per query of ``exact``: the approximate top-k
+    recovers ≥ 2 of the exact top-k. The gate flags a broken fit,
+    assignment, encode or probe order without pinning the probabilistic
+    tail. A query missing from ``approx`` fails.
+
+    ``exact`` is ≤ k·Q rows by construction, and the bound is asserted: it
+    is collected through Arrow (one job) and rebuilt as a local relation.
+    The gate reads it twice (semi-join probe and q_id spine); a subtree
+    behind a Python stage is never plan-shared, so uncollected the corpus
+    BLAS scan ran twice, and a persisted copy was a cache nothing released.
+    Both bounded sides are broadcast, so the joins never plan as
+    exchange+sort SMJs, and the returned plan keeps the approx subtree."""
+    exact = exact.select("q_id", "vec_id")
+    pdf = exact.toPandas()
+    if len(pdf) > k * n_queries:
+        raise ValueError(
+            f"exact top-{k} frame has {len(pdf)} rows, over its {k}·{n_queries} bound"
+        )
+    exact = approx.sparkSession.createDataFrame(pdf, exact.schema)
+    hits = approx.join(F.broadcast(exact), ["q_id", "vec_id"], "left_semi")
+    n_hits = hits.groupBy("q_id").agg(F.count(F.lit(1)).alias("n_hits"))
+    return (
+        exact.select("q_id")
+        .distinct()
+        .join(F.broadcast(n_hits), "q_id", "left")
+        .select("q_id", (F.coalesce("n_hits", F.lit(0)) >= 2).alias("recall_ok"))
+        .orderBy("q_id")
+    )
+
+
+def _pq_sizing(emb: DataFrame):
+    """``(x, ids, ks, rerank)`` for the learned-PQ rows, from ONE planning
+    job: the id-ordered fit sample (``ivf.kmeans_sample``) is the fit
+    matrix, the sizing probe (a separate count only when it truncated) and
+    the query-vector source.
+
+    The recall knobs scale with the corpus (SCALING.md's 10x probe): a
+    denser corpus packs the true top-5 into thinner cosine margins, so a
+    fixed rerank depth and 4-bit codebooks stop clearing the recall gate.
+    Codebooks grow to 6 bits (ks=64) past 5k vectors and the rerank depth
+    is max(100, n/50)."""
+    from arrow_parquet_logs_spark.operators import ivf
+
+    x, truncated, ids = ivf.kmeans_sample(emb, with_ids=True)
+    n = emb.count() if truncated else len(x)
+    return x, ids, 16 if n < 5_000 else 64, max(100, n // 50)
+
+
+@register(
+    "ann_ivf_kmeans",
+    oracle=_RECALL_ORACLE,
     tags=("similarity", "ann", "ivf", "kmeans"),
 )
 def ann_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -173,44 +238,18 @@ def ann_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells actually concentrate neighbors.
 
     The centroids come from a numpy fit no SQL oracle can replay, so the
-    driver-visible check is a recall gate computed Spark-side: per query,
-    the IVF top-5 must recover ≥2 of the brute-force top-5 (measured
-    per-query recall is ≥0.6 at every SF; the gate flags real regressions
-    — a broken fit, assignment, or probe order — without pinning the
-    probabilistic tail). The oracle emits the query ids with true."""
+    driver-visible check is the recall gate (``_recall_gate``): per query,
+    the IVF top-5 must recover ≥2 of the brute-force top-5."""
     from arrow_parquet_logs_spark.operators import ivf
 
     emb = load_table(spark, sf_dir, "embeddings")
-    q = emb.where(F.col("vec_id") < 10)
     # ONE sample job: the id-ordered prefix is the k-means fit matrix AND
-    # the query-vector source (every vec_id < 10 row is in the prefix by
-    # construction — r12 job-chain collapse)
+    # the query-vector source
     x, _, ids = ivf.kmeans_sample(emb, with_ids=True)
-    cents = ivf._lloyd(x, 16, 5)
-    qrows = [(int(i), v.tolist()) for i, v in zip(ids, x) if i < 10]
-    approx = ivf.ivf_search(emb, q, cents, k=5, nprobe=4).select("q_id", "vec_id")
-    # exact side of the recall gate: the BLAS brute force (its ranking
-    # contract passes the ann_cosine_topk oracle at every SF) — guide §4.2.
-    # PERSISTED: the gate consumes this ≤ k·Q-row frame twice (semi-join
-    # probe + q_id spine), and a subtree behind a Python stage is never
-    # plan-shared — unpersisted, the corpus-sized BLAS scan ran TWICE per
-    # gate (two full MapInPandas passes in the executed plan, r12 profile)
-    exact = (
-        S.brute_force_topk(emb, q, k=5, q_rows=qrows)
-        .select("q_id", "vec_id")
-        .persist()
-    )
-    # gate frames are bounded BY CONSTRUCTION (exact: k rows per query,
-    # hits agg: one row per query) — broadcast both sides explicitly so
-    # the ≤ 50-row semi/outer joins never plan as exchange+sort SMJs
-    hits = approx.join(F.broadcast(exact), ["q_id", "vec_id"], "left_semi")
-    return (
-        exact.select("q_id")
-        .distinct()
-        .join(F.broadcast(hits.groupBy("q_id").agg(F.count(F.lit(1)).alias("n_hits"))), "q_id", "left")
-        .select("q_id", (F.coalesce("n_hits", F.lit(0)) >= 2).alias("recall_ok"))
-        .orderBy("q_id")
-    )
+    q, qrows = _gate_queries(emb, x, ids)
+    approx = ivf.ivf_search(emb, q, ivf._lloyd(x, 16, 5), k=5, nprobe=4)
+    # exact side: the BLAS brute force (passes the ann_cosine_topk oracle)
+    return _recall_gate(approx, S.brute_force_topk(emb, q, k=5, q_rows=qrows), 5, len(qrows))
 
 
 @register(
@@ -675,10 +714,7 @@ def embeddings_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ann_pq_rerank",
-    oracle="""
-    SELECT vec_id AS q_id, true AS recall_ok
-    FROM embeddings WHERE vec_id < 10 ORDER BY q_id
-    """,
+    oracle=_RECALL_ORACLE,
     tags=("vector", "ann", "pq", "kmeans"),
 )
 def ann_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -687,61 +723,22 @@ def ann_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     entries ≈ 32× compression), ADC scan in the compressed domain, top-100
     candidates re-scored with exact cosine, final top-5. Codebooks come
     from a numpy fit no SQL oracle can replay (the ann_ivf_kmeans
-    precedent), so the driver-visible check is a recall gate computed
-    Spark-side: per query the reranked top-5 must recover ≥2 of the
-    brute-force top-5 (measured min is 4/5 at the sf0.01 gate scale,
-    ≥2/5 at every shipped SF)."""
+    precedent), so the driver-visible check is the recall gate: per query
+    the reranked top-5 must recover ≥2 of the brute-force top-5 (measured
+    min is 4/5 at the sf0.01 gate scale, ≥2/5 at every shipped SF). The
+    rerank depth and codebook size scale with the corpus (``_pq_sizing``)."""
     from arrow_parquet_logs_spark.operators import pq as PQ
-    from arrow_parquet_logs_spark.operators import similarity as S
 
     emb = load_table(spark, sf_dir, "embeddings")
-    q = emb.where(F.col("vec_id") < 10)
-    # corpus-scaled recall knobs (same sizing rule and rationale as
-    # ann_ivfpq_search — see SCALING.md's 10x probe): denser corpora thin
-    # the top-5 margins past what 4-bit codebooks + a fixed rerank resolve.
-    # ONE planning job: the PQ fit sample doubles as the sizing probe
-    # (ivf.kmeans_sample); a separate count only when the sample truncated.
-    from arrow_parquet_logs_spark.operators import ivf
-
-    x, truncated, ids = ivf.kmeans_sample(emb, with_ids=True)
-    n = emb.count() if truncated else len(x)
-    ks = 16 if n < 5_000 else 64
-    rerank = max(100, n // 50)
-    cbs = PQ.fit_pq(emb, ks=ks, sample=x)
-    # the id-ordered prefix also supplies the query vectors (vec_id < 10
-    # is in the prefix by construction) — no separate collect job
-    qrows = [(int(i), v.tolist()) for i, v in zip(ids, x) if i < 10]
-    approx = PQ.pq_rerank_topk(emb, q, cbs, k=5, rerank=rerank).select("q_id", "vec_id")
-    # exact side of the recall gate: the BLAS brute force (its ranking
-    # contract passes the ann_cosine_topk oracle at every SF) — guide §4.2.
-    # PERSISTED: the gate consumes this ≤ k·Q-row frame twice (semi-join
-    # probe + q_id spine), and a subtree behind a Python stage is never
-    # plan-shared — unpersisted, the corpus-sized BLAS scan ran TWICE per
-    # gate (two full MapInPandas passes in the executed plan, r12 profile)
-    exact = (
-        S.brute_force_topk(emb, q, k=5, q_rows=qrows)
-        .select("q_id", "vec_id")
-        .persist()
-    )
-    # gate frames are bounded BY CONSTRUCTION (exact: k rows per query,
-    # hits agg: one row per query) — broadcast both sides explicitly so
-    # the ≤ 50-row semi/outer joins never plan as exchange+sort SMJs
-    hits = approx.join(F.broadcast(exact), ["q_id", "vec_id"], "left_semi")
-    return (
-        exact.select("q_id")
-        .distinct()
-        .join(F.broadcast(hits.groupBy("q_id").agg(F.count(F.lit(1)).alias("n_hits"))), "q_id", "left")
-        .select("q_id", (F.coalesce("n_hits", F.lit(0)) >= 2).alias("recall_ok"))
-        .orderBy("q_id")
-    )
+    x, ids, ks, rerank = _pq_sizing(emb)
+    q, qrows = _gate_queries(emb, x, ids)
+    approx = PQ.pq_rerank_topk(emb, q, PQ.fit_pq(emb, ks=ks, sample=x), k=5, rerank=rerank)
+    return _recall_gate(approx, S.brute_force_topk(emb, q, k=5, q_rows=qrows), 5, len(qrows))
 
 
 @register(
     "ann_ivfpq_search",
-    oracle="""
-    SELECT vec_id AS q_id, true AS recall_ok
-    FROM embeddings WHERE vec_id < 10 ORDER BY q_id
-    """,
+    oracle=_RECALL_ORACLE,
     tags=("vector", "ann", "pq", "ivf", "index"),
     bench=True,
 )
@@ -751,64 +748,25 @@ def ann_ivfpq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     code rows — a search opens only the nprobe probed directories
     (partition pruning) and reads ~1/32 the corpus bytes (codes, not
     floats), ranks by integer residual-ADC lookup tables, then exact-
-    cosine-reranks the top-50. The 100 TB ANN story in one operator chain.
-    Learned centroids ⇒ recall gate (the ann_ivf_kmeans precedent): the
-    final top-5 must recover ≥2 of the brute-force top-5 per query
-    (measured min 3/5, nprobe=4 of 16 cells)."""
-
+    cosine-reranks the top max(100, n/50). The 100 TB ANN story in one
+    operator chain. Learned centroids ⇒ recall gate (the ann_ivf_kmeans
+    precedent): the final top-5 must recover ≥2 of the brute-force top-5
+    per query. Queries probe 8 of 16 cells with the ``_pq_sizing`` rerank
+    depth; with 4 cells and rerank max(50, n/100) one query failed the gate
+    on 3 of 20 generated sf0.02 corpora (seeds 1, 3, 13)."""
     from arrow_parquet_logs_spark.operators import pq as PQ
-    from arrow_parquet_logs_spark.operators import similarity as S
 
     emb = load_table(spark, sf_dir, "embeddings")
-    q = emb.where(F.col("vec_id") < 10)
-    # recall knobs SCALE WITH THE CORPUS (measured at the 10x probe,
-    # SCALING.md): a denser corpus packs the true top-5 into thinner
-    # cosine margins, so a fixed rerank depth (50 ≈ 2.5% of 2k vectors but
-    # 0.25% of 20k) and 4-bit residual codebooks stop clearing the recall
-    # gate. Grow rerank ~n/100 and move to 6-bit codebooks past 5k
-    # vectors — the FAISS-style sizing rule, applied automatically.
-    # ONE planning job: fit sample doubles as the sizing probe — AND as the
-    # query-vector source (the sample is an id-ordered prefix, so every
-    # vec_id < 10 row is in it by construction): the search's own
-    # scan-and-collect job is skipped outright (r12 job-chain collapse).
-    from arrow_parquet_logs_spark.operators import ivf
-
-    x, truncated, ids = ivf.kmeans_sample(emb, with_ids=True)
-    n = emb.count() if truncated else len(x)
-    ks = 16 if n < 5_000 else 64
-    rerank = max(50, n // 100)
+    x, ids, ks, rerank = _pq_sizing(emb)
     cents, books = PQ.fit_ivfpq(emb, ks=ks, sample=x)
     path = scratch_dir(prefix="ivfpq_idx_") + "/idx"
     PQ.materialize_ivfpq(emb, cents, books, path)
-    qrows = [
-        (int(i), v.tolist()) for i, v in zip(ids, x) if i < 10
-    ]
+    q, qrows = _gate_queries(emb, x, ids)
+    # qrows: the search skips its own scan-and-collect of the query vectors
     approx = PQ.search_ivfpq(
-        spark, path, emb, q, cents, books, k=5, nprobe=4, rerank=rerank,
-        qrows=qrows,
-    ).select("q_id", "vec_id")
-    # exact side of the recall gate: the BLAS brute force (its ranking
-    # contract passes the ann_cosine_topk oracle at every SF) — guide §4.2.
-    # PERSISTED: the gate consumes this ≤ k·Q-row frame twice (semi-join
-    # probe + q_id spine), and a subtree behind a Python stage is never
-    # plan-shared — unpersisted, the corpus-sized BLAS scan ran TWICE per
-    # gate (two full MapInPandas passes in the executed plan, r12 profile)
-    exact = (
-        S.brute_force_topk(emb, q, k=5, q_rows=qrows)
-        .select("q_id", "vec_id")
-        .persist()
+        spark, path, emb, q, cents, books, k=5, nprobe=8, rerank=rerank, qrows=qrows
     )
-    # gate frames are bounded BY CONSTRUCTION (exact: k rows per query,
-    # hits agg: one row per query) — broadcast both sides explicitly so
-    # the ≤ 50-row semi/outer joins never plan as exchange+sort SMJs
-    hits = approx.join(F.broadcast(exact), ["q_id", "vec_id"], "left_semi")
-    return (
-        exact.select("q_id")
-        .distinct()
-        .join(F.broadcast(hits.groupBy("q_id").agg(F.count(F.lit(1)).alias("n_hits"))), "q_id", "left")
-        .select("q_id", (F.coalesce("n_hits", F.lit(0)) >= 2).alias("recall_ok"))
-        .orderBy("q_id")
-    )
+    return _recall_gate(approx, S.brute_force_topk(emb, q, k=5, q_rows=qrows), 5, len(qrows))
 
 
 @register(

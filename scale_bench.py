@@ -122,15 +122,14 @@ def _ivfpq_parts(spark, sf_dir: str):
     from pyspark.sql import functions as F
 
     from arrow_parquet_logs_spark.operators import pq as PQ
+    from arrow_parquet_logs_spark.queries.vectorq import _pq_sizing
     from arrow_parquet_logs_spark.sources.tables import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
     q = emb.where(F.col("vec_id") < 10)
     # the query's corpus-scaled recall knobs (queries/vectorq.py): timings
     # reflect PRODUCTION settings at each SF, not a fixed-work scan
-    n = emb.count()
-    ks = 16 if n < 5_000 else 64
-    rerank = max(50, n // 100)
+    _, _, ks, rerank = _pq_sizing(emb)
     state: dict = {}
 
     def build() -> None:
@@ -142,7 +141,7 @@ def _ivfpq_parts(spark, sf_dir: str):
         _noop(
             PQ.search_ivfpq(
                 spark, state["path"], emb, q, state["cents"], state["books"],
-                k=5, nprobe=4, rerank=rerank,
+                k=5, nprobe=8, rerank=rerank,
             )
         )
 
